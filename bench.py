@@ -215,7 +215,10 @@ def main() -> None:
     # separately so the index-build cost stays visible: for index-consumer
     # queries pass 1 includes the shared build, pass 2 measures the
     # cache-warm steady state — the min is NOT a claim that the build is
-    # free, and pass1_total is the end-to-end cold figure.
+    # free, and pass1_total is the end-to-end cold figure. Pass 1 also
+    # compiles every generated class; later passes reuse them, because the
+    # codegen cache holds the whole registry's working set
+    # (session.CODEGEN_CACHE_MAX_ENTRIES).
     # three passes, not two: on this host a single stage-scheduling or GC
     # hiccup inflates an arbitrary query by 1-4s, and with min-of-2 one
     # bad pass pins that query's reported time (observed: the SAME build

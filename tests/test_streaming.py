@@ -698,7 +698,8 @@ def test_stream_shuffle_partitions_validation(spark, monkeypatch):
     """A bad env value must fail loudly AT the boundary (naming the env
     var) and leave the session conf untouched — not surface later as an
     opaque query-start failure (ADVICE r13). An explicit default=0 must
-    not silently map to the package default."""
+    not silently map to the package default, and its error names the
+    ``default`` argument, not the env var."""
     import pytest
 
     from xboard_spark.streaming.conf import (
@@ -714,7 +715,11 @@ def test_stream_shuffle_partitions_validation(spark, monkeypatch):
                 pass  # pragma: no cover — must not be reached
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
     monkeypatch.delenv(STREAM_SHUFFLE_PARTITIONS_ENV)
-    with pytest.raises(ValueError, match="positive"):
+    with pytest.raises(ValueError, match="positive") as bad_default:
         with stream_shuffle_partitions(spark, default=0):
             pass  # pragma: no cover
+    # the bad value came from the argument, not the environment
+    msg = str(bad_default.value)
+    assert msg.startswith("default ")
+    assert STREAM_SHUFFLE_PARTITIONS_ENV not in msg
     assert spark.conf.get("spark.sql.shuffle.partitions") == before

@@ -1,0 +1,41 @@
+"""Measurement and fixture tools keep the invariants their docstrings
+claim: solo_bench's per-attempt reset really empties the index caches, and
+the scaling-probe generator refuses keys that would collide across copies."""
+
+from __future__ import annotations
+
+import importlib.util
+import pathlib
+
+import pyarrow as pa
+import pytest
+
+from xboard_spark.io import read_table
+from xboard_spark.operators import dedup
+
+_TOOLS = pathlib.Path(__file__).resolve().parent.parent / "tools"
+
+
+def _tool(name):
+    spec = importlib.util.spec_from_file_location(name, _TOOLS / f"{name}.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_solo_bench_reset_empties_index_caches(spark, sf_dir):
+    solo_bench = _tool("solo_bench")
+    dedup.cached_filtered_index(read_table(spark, sf_dir, "documents"), 5, 50)
+    assert len(dedup._INDEX_CACHE) > 0
+    solo_bench.reset(spark)
+    assert len(dedup._INDEX_CACHE) == 0
+
+
+def test_scale_probe_rejects_keys_that_would_collide():
+    probe = _tool("scale_probe_data")
+    ok = pa.table({"o_orderkey": [1, probe.SHIFT - 1], "o_custkey": [0, 5]})
+    probe._check_shift(ok, "orders.parquet", {"o_orderkey", "o_custkey"})
+    for bad in (probe.SHIFT, -1):
+        t = pa.table({"o_orderkey": [1, 2], "o_custkey": [3, bad]})
+        with pytest.raises(ValueError, match=r"orders\.parquet: key column o_custkey"):
+            probe._check_shift(t, "orders.parquet", {"o_orderkey", "o_custkey"})

@@ -21,11 +21,24 @@ import shutil
 import sys
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SHIFT = 10_000_000  # > every int64 key in any sf dir
 
 _TOKEN = re.compile(r"[A-Za-z0-9]+")
+
+
+def _check_shift(table: pa.Table, fname: str, shift_cols: set) -> None:
+    """Copy c adds c * SHIFT to every shifted key, so the copies stay
+    disjoint only while each key lies in [0, SHIFT)."""
+    for name in sorted(shift_cols):
+        mm = pc.min_max(table.column(name)).as_py()
+        if mm["min"] is not None and not (0 <= mm["min"] and mm["max"] < SHIFT):
+            raise ValueError(
+                f"{fname}: key column {name} spans [{mm['min']}, {mm['max']}], "
+                f"outside [0, {SHIFT}); copies would collide"
+            )
 
 
 def _scaled(table: pa.Table, copies: int, shift_cols: dict, fns: dict) -> pa.Table:
@@ -38,7 +51,7 @@ def _scaled(table: pa.Table, copies: int, shift_cols: dict, fns: dict) -> pa.Tab
                 cols.append(col)
                 continue
             if name in shift_cols:
-                cols.append(pa.compute.add(col, c * SHIFT))
+                cols.append(pc.add(col, c * SHIFT))
             elif name in fns:
                 cols.append(fns[name](col, c))
             else:
@@ -99,6 +112,7 @@ def main() -> None:
             continue
         shift_cols, fns = spec
         t = pq.read_table(srcp)
+        _check_shift(t, fname, shift_cols)
         s = _scaled(t, copies, shift_cols, fns)
         if fname == "documents.parquet":
             # keep the n_chars intake contract consistent with the text

@@ -3,9 +3,16 @@ methodology the round notes use to confirm/deny driver-bench drift
 (caches cleared + GC between attempts, same warmup as bench.py).
 
 Usage: python tools/solo_bench.py <query>[,<query>...] [n_attempts] [sf_dir]
-Prints one JSON line per query: {"query": ..., "attempts": [...], "min": ...}.
+Prints one JSON line per query:
+{"query": ..., "attempts": [...], "cold": ..., "min": ...}.
 (Several comma-separated queries share one session + warmup — the
-per-attempt protocol, cache clear + GC, is identical either way.)
+per-attempt protocol, ``reset``, is identical either way.)
+
+Every attempt starts with cleared cached frames and index caches, but the
+generated-class cache (``spark.sql.codegen.cache.maxEntries``) is JVM-wide
+and outlives them: attempt 1 (``cold``) compiles every class the query
+does not share with earlier work in this JVM, later attempts reuse them,
+so ``min`` is a warm-codegen figure.
 """
 
 from __future__ import annotations
@@ -17,6 +24,17 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def reset(spark) -> None:
+    """Per-attempt reset: drop cached frames and the session index
+    caches, then collect garbage in Python and the JVM."""
+    from xboard_spark import clear_index_caches
+
+    spark.catalog.clearCache()
+    clear_index_caches()
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
 
 
 def main() -> None:
@@ -44,15 +62,18 @@ def main() -> None:
         fn = registry[qname]
         attempts = []
         for _ in range(n):
-            spark.catalog.clearCache()
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
+            reset(spark)
             t0 = time.time()
             fn(spark, sf_dir).collect()
             attempts.append(round(time.time() - t0, 3))
         print(
             json.dumps(
-                {"query": qname, "attempts": attempts, "min": min(attempts)}
+                {
+                    "query": qname,
+                    "attempts": attempts,
+                    "cold": attempts[0],
+                    "min": min(attempts),
+                }
             ),
             flush=True,
         )

@@ -41,28 +41,21 @@ def stream_shuffle_partitions(spark, default: int | None = None):
     run, restoring the session value afterwards. State partition counts
     are pinned into each checkpoint at first run, so wrap the WHOLE
     demo (all runs sharing a checkpoint) in one ``with`` block."""
-    n = os.environ.get(
-        STREAM_SHUFFLE_PARTITIONS_ENV,
-        str(
-            default
-            if default is not None
-            else DEFAULT_STREAM_SHUFFLE_PARTITIONS
-        ),
-    )
-    # validate at the boundary: a bad value written into
-    # spark.sql.shuffle.partitions only surfaces later as an opaque
-    # query-start failure deep inside the stream (ADVICE r13)
+    n = os.environ.get(STREAM_SHUFFLE_PARTITIONS_ENV)
+    # validate at the boundary, naming where the bad value came from: a
+    # bad value written into spark.sql.shuffle.partitions only surfaces
+    # later as an opaque query-start failure deep inside the stream
+    # (ADVICE r13)
+    source = STREAM_SHUFFLE_PARTITIONS_ENV
+    if n is None:
+        n = str(DEFAULT_STREAM_SHUFFLE_PARTITIONS if default is None else default)
+        source = "default"
     try:
         n_int = int(n)
     except ValueError:
-        raise ValueError(
-            f"{STREAM_SHUFFLE_PARTITIONS_ENV}={n!r} is not an integer"
-        ) from None
+        raise ValueError(f"{source}={n!r} is not an integer") from None
     if n_int <= 0:
-        raise ValueError(
-            f"{STREAM_SHUFFLE_PARTITIONS_ENV} must be a positive integer, "
-            f"got {n!r}"
-        )
+        raise ValueError(f"{source} must be a positive integer, got {n!r}")
     n = str(n_int)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n)
