@@ -10,6 +10,7 @@ out of the first measured query.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -177,35 +178,121 @@ EXTENDED = [
 ]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+STREAM = "streaming_dedup_pairs"
 
-    # 16g heap for the bench session (overridable via XBOARD_DRIVER_MEM):
-    # at sf0.1 the persisted index artifacts (shingle/LSH/IVF/PQ corpora)
-    # plus 40 queries' shuffle state sit near the 8g default's storage
-    # fraction, and eviction churn showed up as whole-run timing swings
-    # (the same build measured embedding_neardup at 1.8s and 9.5s on
-    # consecutive runs). The box has 128g; measurement headroom is cheap.
-    os.environ.setdefault("XBOARD_DRIVER_MEM", "16g")
 
-    from xboard_spark.session import get_spark
-    import __spark_entry__ as entrymod
+def default_driver_mem() -> str:
+    """min(16g, half of physical RAM), in megabytes."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, ram_mb // 2)}m"
 
-    spark = get_spark("xboard-bench")
-    qs = entrymod.queries()
 
-    # warmup: decode every column of every table once (count(col) cannot be
-    # answered from parquet footers) so page cache, column decoders, and
-    # codegen paths warm outside the measured window — measured numbers then
-    # reflect steady state, not first-touch I/O
+def warmup(spark, sf_dir: str) -> None:
+    """Decode every column of every table once (count(col) cannot be
+    answered from parquet footers) so page cache, column decoders, and
+    codegen paths warm outside the measured window: measured numbers then
+    reflect steady state, not first-touch I/O."""
     from pyspark.sql import functions as F
+
     from xboard_spark.io import TESTDATA_TABLES, read_table
 
     for t in TESTDATA_TABLES:
         df = read_table(spark, sf_dir, t)
         df.select([F.count(c) for c in df.columns]).collect()
+
+
+def error_line(exc: BaseException) -> str:
+    """The one-line, bounded record of a failure kept in the JSON line."""
+    return f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
+
+
+def is_regression(dt: float, b: float) -> bool:
+    """The per-query gate rule: ``dt`` is BOTH >2x its baseline ``b`` AND
+    >1s absolute above it. The absolute floor is set from measurement, not
+    taste: identical plans swing 1.3s..2.9s warm run-to-run on a shared
+    host, so sub-second-baseline queries would trip a tighter gate on pure
+    scheduler noise (a 0.5s floor false-positived 3 queries in one loaded
+    run). Real regressions, the kind worth failing a round for, show up as
+    multiples of seconds."""
+    return dt > 2.0 * b and dt - b > 1.0
+
+
+def baseline_of(name: str, base: dict, rebase: dict) -> float | None:
+    """``name``'s baseline seconds. A ``rebaselined`` entry overrides the
+    recorded number WITH a recorded reason: it is used when a plan was
+    deliberately rewritten (e.g. a scale-broken single-partition sort
+    replaced by a distributed plan, or a broken LSH hash fixed), so the old
+    wall time measures a plan that no longer exists."""
+    return rebase.get(name, {}).get("value") or base.get(name)
+
+
+def gate(timings: dict, base: dict, rebase: dict, label: str = "") -> tuple[dict, list]:
+    """Per-query regression gate of ``timings`` against their baselines
+    (``baseline_of``): returns ``(ratios, regressions)``, the rounded
+    time/baseline ratio of every query that has a baseline and one message
+    per query that ``is_regression``. ``label`` names the measured part in
+    the message (e.g. ``"steady "``)."""
+    ratios: dict[str, float] = {}
+    regressions: list[str] = []
+    for name, dt in timings.items():
+        b = baseline_of(name, base, rebase)
+        if not b:
+            continue
+        ratios[name] = round(dt / b, 2)
+        if is_regression(dt, b):
+            regressions.append(f"{name}: {label}{dt}s vs baseline {b}s ({dt / b:.1f}x)")
+    return ratios, regressions
+
+
+def remeasure(name: str, measure, dt: float, b: float, retry_errors: dict) -> float:
+    """Suspect re-measure: while ``dt`` would trip the gate against ``b``,
+    take up to TWO more isolated measurements ``measure()``, keeping the
+    min and stopping as soon as one clears. Measured need: with the same
+    build, successive full runs flagged knn_ivf, then doc_chunks, then
+    nothing; one scheduler/GC hiccup can cover every sweep of one query
+    while calibration stays clean, and a single re-measure proved
+    insufficient (a part_pagerank flag at 2.1x survived its lone
+    re-measure, then measured 1.1x on the next full run). Re-measuring
+    ONLY suspects keeps the added wall time at seconds, every recorded
+    number is still a real measurement, and a genuine regression stays
+    slow on all attempts.
+
+    A retry that raises must NOT discard the already-successful original
+    measurement (ADVICE r12): the original number stands and the failure
+    is recorded in ``retry_errors[name]``, never in ``errors`` (which
+    reads the whole bench step red)."""
+    for _ in range(2):
+        if not is_regression(dt, b):
+            break
+        try:
+            dt = min(dt, measure())
+        except Exception as exc:  # a flaky retry must not turn a green step red
+            retry_errors[name] = error_line(exc)
+            break
+    return dt
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+
+    # driver heap for the bench session (overridable via XBOARD_DRIVER_MEM):
+    # at sf0.1 the persisted index artifacts (shingle/LSH/IVF/PQ corpora)
+    # plus 40 queries' shuffle state sit near the 8g default's storage
+    # fraction, and eviction churn showed up as whole-run timing swings
+    # (the same build measured embedding_neardup at 1.8s and 9.5s on
+    # consecutive runs). 16g where the host has the RAM for it; never more
+    # than half of it, so the heap cannot outgrow a small host.
+    os.environ.setdefault("XBOARD_DRIVER_MEM", default_driver_mem())
+
+    from xboard_spark.session import get_spark
+    from xboard_spark.streaming.dedup import LAST_DEMO_TIMINGS
+    import __spark_entry__ as entrymod
+
+    spark = get_spark("xboard-bench")
+    qs = entrymod.queries()
+    warmup(spark, sf_dir)
 
     # two passes, per-query min: pass 1 pays one-time index builds (the
     # shared dedup/IVF indexes are persistent artifacts by design — at scale
@@ -253,13 +340,35 @@ def main() -> None:
     cal_pre = _calibrate()
 
     errors: dict[str, str] = {}
-    # a retry that crashes must NOT discard the already-successful
-    # original measurement (ADVICE r12): the gate evaluates the original
-    # number and the retry failure is recorded here, never in ``errors``
-    # (which reads the whole bench step red).
     retry_errors: dict[str, str] = {}
-    passes: list[dict[str, float]] = []
-    for _ in range(3):
+    # streaming_dedup_pairs wall time is dominated by two fixed stream
+    # start/stops (VERDICT r11 #5 watch item): record the wall/steady
+    # split from the demo's own progress events (the run with the best
+    # steady number) and key this query's regression gate on the STEADY
+    # (micro-batch execution) part, where a dedup-path regression
+    # actually shows up.
+    stream_split: dict[str, float] = {}
+
+    def time_query(name: str) -> float:
+        nonlocal stream_split
+        t0 = time.time()
+        qs[name](spark, sf_dir).collect()
+        dt = round(time.time() - t0, 3)
+        if name == STREAM:
+            steady = LAST_DEMO_TIMINGS.get("steady_sec")
+            if steady is not None and steady < stream_split.get("steady_sec", float("inf")):
+                stream_split = dict(LAST_DEMO_TIMINGS)
+        return dt
+
+    def retime(name: str) -> float:
+        _reclaim()
+        return time_query(name)
+
+    def retime_steady(name: str) -> float:
+        retime(name)
+        return stream_split["steady_sec"]
+
+    def run_pass(names: list[str]) -> dict[str, float]:
         # reclaim dead plan/shuffle state between passes: Spark's
         # ContextCleaner only forces a full GC every 30 min
         # (spark.cleaner.periodicGC.interval), so a 5-minute bench never
@@ -268,90 +377,52 @@ def main() -> None:
         # passes measuring uniformly slower than the same queries solo.
         _reclaim()
         pass_t: dict[str, float] = {}
-        for name in HEADLINE:
-            if name in errors:  # failed once -> don't pay it 3x
+        for name in names:
+            if name in errors:  # failed once -> don't pay it again
                 continue
-            fn = qs[name]
-            t0 = time.time()
             try:
-                fn(spark, sf_dir).collect()
+                pass_t[name] = time_query(name)
             except Exception as exc:  # record, keep benching the rest
                 # round 3 postmortem: one operator's AnalysisException
                 # killed the whole bench (rc 1, no JSON line), so the
                 # round recorded NO performance numbers at all. A failed
                 # query is now a named line item in the emitted JSON and
-                # a non-zero exit — the other 39 measurements survive.
-                errors[name] = f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
-                continue
-            pass_t[name] = round(time.time() - t0, 3)
-        passes.append(pass_t)
-    timings = {
-        name: min(p[name] for p in passes if name in p)
-        for name in HEADLINE
-        if any(name in p for p in passes)
-    }
+                # a non-zero exit — the other measurements survive.
+                errors[name] = error_line(exc)
+        return pass_t
 
-    # suspect re-measure: a query whose min-of-3 would trip the regression
-    # gate gets two more isolated measurements (after a GC) before being
-    # recorded. Measured need: with the same build, successive full runs
-    # flagged knn_ivf, then doc_chunks, then nothing — one scheduler/GC
-    # hiccup can cover all three sweeps of one query while calibration
-    # stays clean. Re-measuring ONLY suspects keeps the added wall time
-    # at seconds and every recorded number is still a real measurement;
-    # a genuine regression stays slow on all five attempts and is
-    # reported unchanged.
+    def check(found: dict, base: dict, rebase: dict, measure=retime, label: str = ""):
+        """Re-measure the suspects of ``found`` in place, then gate it."""
+        for name, dt in found.items():
+            b = baseline_of(name, base, rebase)
+            if b:
+                found[name] = remeasure(
+                    name, functools.partial(measure, name), dt, b, retry_errors
+                )
+        return gate(found, base, rebase, label)
+
     base_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BASELINE_BENCH.json")
     baseline = None
     if os.path.exists(base_path):
         with open(base_path) as fh:
             baseline = json.load(fh)
-    if baseline is not None and baseline.get("sf") == sf:
-        rebase0 = baseline.get("rebaselined", {})
-        for name, dt in list(timings.items()):
-            b = rebase0.get(name, {}).get("value") or baseline["queries"].get(name)
-            if not b or not (dt > 2.0 * b and dt - b > 1.0):
-                continue
-            _reclaim()
-            for _ in range(2):
-                t0 = time.time()
-                try:
-                    qs[name](spark, sf_dir).collect()
-                except Exception as exc:
-                    errors[name] = (
-                        f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
-                    )
-                    break
-                timings[name] = min(timings[name], round(time.time() - t0, 3))
+    # the gate compares against BASELINE_BENCH.json (round-1 numbers, same
+    # metric) only at the sf it was recorded at
+    gated = baseline is not None and baseline.get("sf") == sf
 
-    # per-query regression gate vs the recorded baseline (BASELINE_BENCH.json
-    # = round-1 numbers, same metric, same sf): a query is flagged when it is
-    # BOTH >2x its baseline AND >1s absolute above it. The absolute floor is
-    # set from measurement, not taste: identical plans swing 1.3s..2.9s warm
-    # on this host run-to-run (shared machine), so sub-second-baseline
-    # queries would trip a tighter gate on pure scheduler noise — a 0.5s
-    # floor false-positived 3 queries in one loaded run. Real regressions
-    # (the kind worth failing a round for) show up as multiples of seconds.
-    # "rebaselined" entries override the r1 number WITH a recorded reason —
-    # used when a plan was deliberately rewritten (e.g. a scale-broken
-    # single-partition sort replaced by a distributed plan, or a broken
-    # LSH hash fixed) so the old wall time measures a plan that no longer
-    # exists; the gate then tracks regressions against the corrected plan.
+    passes = [run_pass(HEADLINE) for _ in range(3)]
+    timings = {
+        name: min(p[name] for p in passes if name in p)
+        for name in HEADLINE
+        if any(name in p for p in passes)
+    }
     ratios: dict[str, float] = {}
     regressions: list[str] = []
-    if baseline is not None:
-        rebase = baseline.get("rebaselined", {})
-        if baseline.get("sf") == sf:
-            for name, dt in timings.items():
-                b = rebase.get(name, {}).get("value") or baseline[
-                    "queries"
-                ].get(name)
-                if not b:
-                    continue
-                ratios[name] = round(dt / b, 2)
-                if dt > 2.0 * b and dt - b > 1.0:
-                    regressions.append(f"{name}: {dt}s vs baseline {b}s "
-                                       f"({dt / b:.1f}x)")
+    if gated:
+        ratios, regressions = check(
+            timings, baseline["queries"], baseline.get("rebaselined", {})
+        )
 
     # min-of-2 extension timings (see EXTENDED comment); failures are
     # recorded per-query and do not abort the run. Round-4 lesson: the
@@ -361,124 +432,36 @@ def main() -> None:
     # pass 2 measures steady state, and the recorded value is the min —
     # same discipline as the gated section.
     extended: dict[str, float] = {}
-    # streaming_dedup_pairs wall time is dominated by two fixed stream
-    # start/stops (VERDICT r11 #5 watch item): record the wall/steady
-    # split from the demo's own progress events and key this query's
-    # regression gate on the STEADY (micro-batch execution) part, where
-    # a dedup-path regression actually shows up.
-    stream_split: dict[str, float] = {}
     for _pass in range(2):
-        _reclaim()
-        for name in EXTENDED:
-            if name not in qs or name in errors:
-                continue
-            t0 = time.time()
-            try:
-                qs[name](spark, sf_dir).collect()
-            except Exception as exc:
-                errors[name] = f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
-                continue
-            dt = round(time.time() - t0, 3)
+        for name, dt in run_pass(EXTENDED).items():
             extended[name] = min(extended.get(name, dt), dt)
-            if name == "streaming_dedup_pairs":
-                try:
-                    from xboard_spark.streaming.dedup import (
-                        LAST_DEMO_TIMINGS,
-                    )
 
-                    if LAST_DEMO_TIMINGS.get("steady_sec") is not None:
-                        better = not stream_split or (
-                            LAST_DEMO_TIMINGS["steady_sec"]
-                            < stream_split.get("steady_sec", float("inf"))
-                        )
-                        if better:
-                            stream_split = dict(LAST_DEMO_TIMINGS)
-                except Exception:  # timing is evidence, never a failure
-                    pass
-
-    # extended regression gate (round 6): same >2x-and->1s rule as
-    # HEADLINE, against the recorded min-of-2 extended baseline; suspects
-    # get one isolated re-measure first (same rationale as the HEADLINE
-    # suspect path — a single scheduler/GC hiccup can cover both sweeps
-    # of one query while calibration stays clean).
+    # extended regression gate (round 6): same rule as HEADLINE, against
+    # the recorded min-of-2 extended baseline, with the same suspect
+    # re-measure; streaming_dedup_pairs gates on its steady number when
+    # both sides of that comparison exist (the first red seal of round 12
+    # tripped its gate at 2.6x during a host-noise window that a solo
+    # min-of-3 immediately read at 1.04x).
     ext_ratios: dict[str, float] = {}
     extended_regressions: list[str] = []
-    if baseline is not None and baseline.get("sf") == sf:
-        ext_base = baseline.get("extended", {})
-        ext_rebase = baseline.get("extended_rebaselined", {})
+    if gated:
         ext_steady = baseline.get("extended_steady", {})
-        for name, dt in list(extended.items()):
-            # gate streaming_dedup_pairs on its steady-state number when
-            # both sides of the comparison exist (see stream_split above)
-            if (
-                name == "streaming_dedup_pairs"
-                and name in ext_steady
-                and stream_split.get("steady_sec") is not None
-            ):
-                b, dt = ext_steady[name], stream_split["steady_sec"]
-                # same isolated re-measure protocol as the wall gates
-                # (up to two retries, stopping when one clears): the
-                # first red seal of round 12 tripped this gate at 2.6x
-                # during a host-noise window that a solo min-of-3
-                # immediately read at 1.04x
-                attempts = 0
-                while dt > 2.0 * b and dt - b > 1.0 and attempts < 2:
-                    attempts += 1
-                    _reclaim()
-                    try:
-                        qs[name](spark, sf_dir).collect()
-                        from xboard_spark.streaming.dedup import (
-                            LAST_DEMO_TIMINGS,
-                        )
-
-                        retry = LAST_DEMO_TIMINGS.get("steady_sec")
-                        if retry is not None and retry < dt:
-                            dt = retry
-                            stream_split = dict(LAST_DEMO_TIMINGS)
-                    except Exception as exc:
-                        # keep the original steady measurement; a flaky
-                        # retry must not turn a green step red
-                        retry_errors[name] = (
-                            f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
-                        )
-                        break
-                ext_ratios[name] = round(dt / b, 2)
-                if dt > 2.0 * b and dt - b > 1.0:
-                    extended_regressions.append(
-                        f"{name}: steady {dt}s vs baseline {b}s "
-                        f"({dt / b:.1f}x)"
-                    )
-                continue
-            b = ext_rebase.get(name, {}).get("value") or ext_base.get(name)
-            if not b:
-                continue
-            # up to TWO isolated re-measures, stopping as soon as one
-            # clears: a single re-measure proved insufficient on this
-            # host (a part_pagerank flag at 2.1x survived its lone
-            # re-measure, then measured 1.1x on the next full run — the
-            # hiccup window covered both sweeps AND the retry). Real
-            # regressions are deterministic and fail all attempts.
-            attempts = 0
-            while dt > 2.0 * b and dt - b > 1.0 and attempts < 2:
-                attempts += 1
-                _reclaim()
-                t0 = time.time()
-                try:
-                    qs[name](spark, sf_dir).collect()
-                    extended[name] = dt = min(
-                        dt, round(time.time() - t0, 3)
-                    )
-                except Exception as exc:
-                    # keep the original wall measurement (ADVICE r12)
-                    retry_errors[name] = (
-                        f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
-                    )
-                    break
-            ext_ratios[name] = round(dt / b, 2)
-            if dt > 2.0 * b and dt - b > 1.0:
-                extended_regressions.append(
-                    f"{name}: {dt}s vs baseline {b}s ({dt / b:.1f}x)"
-                )
+        steady = (
+            {STREAM: stream_split["steady_sec"]}
+            if STREAM in ext_steady and "steady_sec" in stream_split
+            else {}
+        )
+        wall = {n: dt for n, dt in extended.items() if n not in steady}
+        ext_ratios, extended_regressions = check(
+            wall, baseline.get("extended", {}),
+            baseline.get("extended_rebaselined", {}),
+        )
+        extended.update(wall)
+        steady_ratios, steady_regressions = check(
+            steady, ext_steady, {}, measure=retime_steady, label="steady "
+        )
+        ext_ratios.update(steady_ratios)
+        extended_regressions += steady_regressions
 
     cal_post = _calibrate()
     total = round(sum(timings.values()), 3)

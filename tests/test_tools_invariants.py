@@ -1,11 +1,15 @@
 """Measurement and fixture tools keep the invariants their docstrings
-claim: solo_bench's per-attempt reset really empties the index caches, and
-the scaling-probe generator refuses keys that would collide across copies."""
+claim: solo_bench's per-attempt reset really empties the index caches, the
+scaling-probe generator refuses keys that would collide across copies, and
+check_oracle runs UDF queries from any working directory."""
 
 from __future__ import annotations
 
 import importlib.util
+import os
 import pathlib
+import subprocess
+import sys
 
 import pyarrow as pa
 import pytest
@@ -39,3 +43,15 @@ def test_scale_probe_rejects_keys_that_would_collide():
         t = pa.table({"o_orderkey": [1, 2], "o_custkey": [3, bad]})
         with pytest.raises(ValueError, match=r"orders\.parquet: key column o_custkey"):
             probe._check_shift(t, "orders.parquet", {"o_orderkey", "o_custkey"})
+
+
+def test_check_oracle_runs_udf_queries_outside_the_repo(sf_dir, tmp_path):
+    # no PYTHONPATH and a cwd outside the repo: the Python UDF workers can
+    # only import xboard_spark if check_oracle exports the repo path itself
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.setdefault("SPARK_GRAFT_CPUS", "2")
+    run = subprocess.run(
+        [sys.executable, str(_TOOLS / "check_oracle.py"), sf_dir, "char_lm_fluency"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.stdout.strip().splitlines()[-1] == "0 failures", run.stdout[-2000:]

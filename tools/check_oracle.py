@@ -7,15 +7,19 @@ vs DuckDB ``.df()`` — what the driver actually hashes; the fetchall()
 path alone hid a HUGEINT-to-float64 vs int64 drift for four rounds).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+(``run(sf_dir, only)`` is the same check as a function returning the
+failing query names; tools/sweep.py calls it.)
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -97,14 +101,22 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-
-    unknown = only - set(qs)
+    unknown = only - set(entrymod.queries())
     if unknown:
         # a typo'd name must not produce a vacuous '0 failures' green
         print(f"ERROR: unknown query name(s): {sorted(unknown)}")
         return 2
+    return 1 if run(sf_dir, only) else 0
+
+
+def run(sf_dir: str, only=()) -> list[str]:
+    """Check every query (or only the named ones) on ``sf_dir``, printing
+    one PASS/FAIL/SKIP line each; returns the failing query names."""
+    only = set(only)
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
 
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
@@ -112,6 +124,11 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
+    # Python UDF workers do not inherit sys.path; without the repo on
+    # PYTHONPATH, UDF queries fail to import xboard_spark when the check
+    # runs from outside the repo
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("oracle-check")
     failures = []
     for name, fn in qs.items():
@@ -184,7 +201,7 @@ def main() -> int:
                     pass  # dead context at teardown
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    return 1 if failures else 0
+    return failures
 
 
 if __name__ == "__main__":

@@ -36,17 +36,12 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sweep import copy_fixture  # noqa: E402  (tools/ is this script's dir)
+
 
 # --------------------------------------------------------------------------
 # fixture mutation helpers (driver-side pyarrow, physical types preserved)
 # --------------------------------------------------------------------------
-
-
-def _copy_fixture(src: str, dst: str) -> None:
-    os.makedirs(dst, exist_ok=True)
-    for f in sorted(os.listdir(src)):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(src, f), os.path.join(dst, f))
 
 
 def _append_rows(sf_dir: str, table: str, rows: list[dict]) -> None:
@@ -1176,7 +1171,7 @@ def main() -> None:
             mutate, check = pool.get(name) or CHECKS.get(name) or \
                 CHECKS_STAGED_R14.get(name) or CHECKS_STAGED_R15[name]
             pert_dir = os.path.join(workroot, name)
-            _copy_fixture(src, pert_dir)
+            copy_fixture(src, pert_dir)
             try:
                 ctx = mutate(src, pert_dir, spark)
                 base_rows = queries[name](spark, src).collect()

@@ -47,15 +47,11 @@ def main() -> None:
     )
 
     import __spark_entry__ as entry
-    from pyspark.sql import functions as F
-
-    from xboard_spark.io import TESTDATA_TABLES, read_table
+    from bench import warmup
     from xboard_spark.session import get_spark
 
     spark = get_spark()
-    for t in TESTDATA_TABLES:
-        df = read_table(spark, sf_dir, t)
-        df.select([F.count(c) for c in df.columns]).collect()
+    warmup(spark, sf_dir)
 
     registry = entry.queries()
     for qname in name.split(","):
