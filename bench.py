@@ -202,8 +202,13 @@ def warmup(spark, sf_dir: str) -> None:
 
 
 def error_line(exc: BaseException) -> str:
-    """The one-line, bounded record of a failure kept in the JSON line."""
-    return f"{type(exc).__name__}: {exc}".splitlines()[0][:200]
+    """The one-line, bounded record of a failure kept in the JSON line:
+    the message's first line or, when that is empty (a PySpark
+    ``PythonException`` opens with a blank line and ends with the worker's
+    own ``ValueError: ...``), its last non-empty line."""
+    lines = [ln.strip() for ln in str(exc).splitlines()] or [""]
+    cause = lines[0] or next((ln for ln in reversed(lines) if ln), "")
+    return f"{type(exc).__name__}: {cause}"[:200]
 
 
 def is_regression(dt: float, b: float) -> bool:

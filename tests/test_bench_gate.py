@@ -118,3 +118,18 @@ def test_driver_mem_default_is_half_of_ram_capped_at_16g(monkeypatch, ram_gib, e
     pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_gib * 2**30 // 4096}
     monkeypatch.setattr(bench.os, "sysconf", pages.__getitem__)
     assert bench.default_driver_mem() == expect
+
+
+def test_error_line_keeps_the_python_worker_cause(spark):
+    """A UDF failure reaches the driver as a PythonException whose message
+    opens with a blank line; the record must keep the worker's error."""
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("boom-xyz")
+
+    with pytest.raises(Exception) as caught:
+        spark.range(1).select(boom("id")).collect()
+    assert bench.error_line(caught.value) == "PythonException: ValueError: boom-xyz"
+    assert bench.error_line(RuntimeError("first\nsecond")) == "RuntimeError: first"

@@ -5,7 +5,26 @@ its consumer's output is unchanged (coherence)."""
 
 from __future__ import annotations
 
+import gc
+
+from xboard_spark import cache
 from xboard_spark.cache import BoundedFrameCache
+
+OPERATOR_CACHES = {
+    "dedup.index",
+    "dedup.pairs",
+    "dedup.clusters",
+    "graph.edges",
+    "graph.raw_edges",
+    "graph.oriented",
+    "graph.keyword_graph",
+    "linkage.fuzzy_pairs",
+    "linkage.entity_clusters",
+    "similarity.norm",
+    "similarity.corpus",
+    "similarity.ivf",
+    "similarity.pq",
+}
 
 
 class _FakeFrame:
@@ -15,6 +34,16 @@ class _FakeFrame:
     def unpersist(self):
         self.unpersisted += 1
         return self
+
+
+class _Source:
+    """Stands in for the source DataFrame ``memo`` keys by."""
+
+    def __init__(self, h: int) -> None:
+        self.h = h
+
+    def semanticHash(self) -> int:
+        return self.h
 
 
 def test_lru_evicts_and_unpersists():
@@ -103,34 +132,23 @@ def test_clear_index_caches_still_releases_everything(spark):
     assert len(dedup._INDEX_CACHE) == 0
 
 
-def test_on_evict_fires_only_on_true_eviction():
-    gone: list = []
-    c = BoundedFrameCache(max_entries=2, on_evict=gone.append)
-    a, b = _FakeFrame(), _FakeFrame()
-    c["a"] = a
-    c["a"] = _FakeFrame()  # replacement: key stays -> no callback
-    assert gone == []
-    c["b"] = b
-    c["c"] = _FakeFrame()  # evicts "a"
-    assert gone == ["a"]
+def test_cluster_rounds_leave_with_their_frame():
+    """The star-rounds diagnostic rides in the cluster entry, so it is
+    restored on a hit and cannot outlive its frame: evicting or releasing
+    the entry drops both."""
+    c = BoundedFrameCache(max_entries=1)
+    frames = []
 
+    def build(rounds):
+        frames.append(_FakeFrame())
+        return frames[-1], rounds
 
-def test_sidecar_keys_evict_in_lockstep(spark):
-    """The star-rounds sidecars must not outlive their cluster frames:
-    evicting a key from the bounded cluster cache pops its sidecar."""
-    from xboard_spark.operators import dedup
-
-    dedup._CLUSTERS_CACHE["k1"] = _FakeFrame()
-    dedup._CLUSTERS_ROUNDS["k1"] = 3
-    old_bound = dedup._CLUSTERS_CACHE.max_entries
-    dedup._CLUSTERS_CACHE.max_entries = 1
-    try:
-        dedup._CLUSTERS_CACHE["k2"] = _FakeFrame()  # evicts k1
-        assert "k1" not in dedup._CLUSTERS_CACHE
-        assert "k1" not in dedup._CLUSTERS_ROUNDS
-    finally:
-        dedup._CLUSTERS_CACHE.max_entries = old_bound
-        dedup._CLUSTERS_CACHE.pop("k2", None)
+    assert c.memo(_Source(1), (), lambda: build(3)) == (frames[0], 3)
+    assert c.memo(_Source(1), (), lambda: build(99)) == (frames[0], 3)
+    c.memo(_Source(2), (), lambda: build(5))  # evicts the first entry
+    assert list(c.values()) == [(frames[1], 5)] and frames[0].unpersisted == 1
+    assert c.release_all() == 1  # counts frames, not the rounds beside them
+    assert not c and frames[1].unpersisted == 1
 
 
 def test_cache_model_property():
@@ -171,9 +189,8 @@ def test_cache_model_property():
     assert c.evictions > 0  # the sequence actually exercised eviction
 
 
-def test_release_all_unpersists_fires_on_evict_and_counts():
-    gone: list = []
-    c = BoundedFrameCache(max_entries=8, on_evict=gone.append)
+def test_release_all_unpersists_and_counts():
+    c = BoundedFrameCache(max_entries=8)
     t = (_FakeFrame(), _FakeFrame())
     single = _FakeFrame()
     c["t"] = t
@@ -181,7 +198,6 @@ def test_release_all_unpersists_fires_on_evict_and_counts():
     n = c.release_all()
     assert n == 3  # counts FRAMES, not keys (tuple = 2)
     assert len(c) == 0 and c.evictions == 0  # release != LRU pressure
-    assert sorted(gone) == ["s", "t"]
     assert all(f.unpersisted == 1 for f in (*t, single))
 
 
@@ -195,3 +211,42 @@ def test_release_rejects_non_frame_entries():
 
     with pytest.raises(TypeError, match="must be DataFrames"):
         BoundedFrameCache._release((object(),))
+
+
+def test_memo_keys_by_source_hash_and_params_and_counts():
+    c = BoundedFrameCache("test.memo")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return _FakeFrame()
+
+    first = c.memo(_Source(7), (3, 50), build)
+    assert list(c) == [(7, 3, 50)]
+    assert c.memo(_Source(7), (3, 50), build) is first and len(calls) == 1
+    c.memo(_Source(7), (4, 50), build)  # other params: another entry
+    assert (c.hits, c.misses, len(calls)) == (1, 2, 2) and c.build_s >= 0
+    assert cache.stats()["test.memo"] == {
+        "hits": 1, "misses": 2, "build_s": c.build_s
+    }
+
+
+def test_clear_index_caches_releases_an_unlisted_cache():
+    """Registration, not a list: a cache nobody names anywhere is still
+    released by the session-wide valve."""
+    import xboard_spark
+
+    throwaway = BoundedFrameCache("test.throwaway")
+    f = _FakeFrame()
+    throwaway["k"] = (f, 2)
+    assert xboard_spark.clear_index_caches() >= 1
+    assert not throwaway and f.unpersisted == 1
+
+
+def test_registered_names_are_the_operator_caches():
+    from xboard_spark.operators import dedup, graph, linkage, similarity  # noqa: F401
+
+    gc.collect()  # drop throwaway caches other tests left unreferenced
+    named = [c.name for c in cache.registered() if c.name is not None]
+    assert sorted(named) == sorted(OPERATOR_CACHES)
+    assert set(cache.stats()) == OPERATOR_CACHES

@@ -368,8 +368,8 @@ def test_cluster_cache_hit_restores_last_rounds(docs):
     dedup.components_star.last_rounds = -999
     dedup.dedup_clusters(docs, tau=0.3)  # warm: cache hit, no star loop
     assert dedup.components_star.last_rounds == recorded
-    xboard_spark.clear_index_caches()
-    assert not dedup._CLUSTERS_ROUNDS
+    xboard_spark.clear_index_caches()  # the rounds leave with the frame
+    assert not dedup._CLUSTERS_CACHE
 
 
 def test_min_label_components_converges_on_diameter6_chain(spark):

@@ -1097,7 +1097,6 @@ def test_linkage_caches_warm_identical_and_released(spark):
     xboard_spark.clear_index_caches()
     assert not linkage._FUZZY_PAIRS_CACHE
     assert not linkage._ENTITY_CLUSTERS_CACHE
-    assert not linkage._ENTITY_ROUNDS
     assert linkage.fuzzy_customer_pairs(cust).collect() == pairs_cold
     assert linkage.customer_entity_clusters(cust).collect() == clusters_cold
 

@@ -7,6 +7,8 @@ fixed tax inside every timed query. The cache returns the same handle
 for an UNCHANGED table and must invalidate on any file change (size or
 mtime), so evolving tables never serve a stale schema or file set.
 Metadata only: nothing is persisted — every action still scans parquet.
+A reopen after an in-place rewrite also releases the session index caches,
+whose keys (plan ``semanticHash``) cannot tell the old bytes from the new.
 """
 
 from __future__ import annotations
@@ -64,3 +66,29 @@ def test_distinct_paths_are_distinct_entries(spark, tmp_path):
     assert read_table(spark, b, "mini").count() == 2
     # both stay cached independently
     assert read_table(spark, a, "mini").count() == 1
+
+
+def test_in_place_rewrite_rebuilds_the_index(spark, tmp_path):
+    """The reopened handle of a rewritten table has the old handle's plan
+    semanticHash; the index built from the old files must not answer for
+    the new ones."""
+    from xboard_spark.operators import dedup
+
+    sf_dir = str(tmp_path / "lake")
+    os.makedirs(sf_dir)
+    path = os.path.join(sf_dir, "documents.parquet")
+
+    def write_docs(texts):
+        ids = pa.array(range(len(texts)), pa.int64())
+        pq.write_table(pa.table({"doc_id": ids, "text": texts}), path)
+
+    dup = "the same sentence about parquet files and spark shuffles"
+    write_docs([dup, dup, "something else entirely, nothing shared"])
+    docs = read_table(spark, sf_dir, "documents")
+    assert dedup.ngram_jaccard_pairs(docs).count() == 1
+    write_docs(["alpha beta gamma delta", "one two three four", "x y z w v"])
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    fresh = read_table(spark, sf_dir, "documents")
+    assert fresh.semanticHash() == docs.semanticHash()
+    assert dedup.ngram_jaccard_pairs(fresh).count() == 0

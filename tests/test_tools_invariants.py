@@ -1,7 +1,8 @@
 """Measurement and fixture tools keep the invariants their docstrings
 claim: solo_bench's per-attempt reset really empties the index caches, the
 scaling-probe generator refuses keys that would collide across copies, and
-check_oracle runs UDF queries from any working directory."""
+check_oracle — like anything that builds its session with ``get_spark`` —
+runs UDF queries from any working directory."""
 
 from __future__ import annotations
 
@@ -47,7 +48,7 @@ def test_scale_probe_rejects_keys_that_would_collide():
 
 def test_check_oracle_runs_udf_queries_outside_the_repo(sf_dir, tmp_path):
     # no PYTHONPATH and a cwd outside the repo: the Python UDF workers can
-    # only import xboard_spark if check_oracle exports the repo path itself
+    # only import xboard_spark if get_spark exports the repo path itself
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env.setdefault("SPARK_GRAFT_CPUS", "2")
     run = subprocess.run(
@@ -55,3 +56,28 @@ def test_check_oracle_runs_udf_queries_outside_the_repo(sf_dir, tmp_path):
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.stdout.strip().splitlines()[-1] == "0 failures", run.stdout[-2000:]
+
+
+def test_get_spark_exports_the_package_to_udf_workers(tmp_path):
+    """A Python UDF whose worker imports xboard_spark, run through
+    ``get_spark`` from a cwd outside the repo with no PYTHONPATH."""
+    script = f"""
+import sys
+sys.path.insert(0, {str(_TOOLS.parent)!r})
+from pyspark.sql import functions as F
+from xboard_spark.session import get_spark
+
+def probe(x):
+    import xboard_spark
+    return len(xboard_spark.__version__)
+
+spark = get_spark("udf-path-probe", master="local[1]", shuffle_partitions=1)
+print(spark.range(1).select(F.udf(probe, "long")("id")).first()[0])
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.strip().splitlines()[-1] == "5"

@@ -23,6 +23,7 @@ sys.path.insert(0, REPO)
 
 import duckdb
 
+from bench import error_line
 from xboard_spark.io import TESTDATA_TABLES
 from xboard_spark.session import get_spark
 
@@ -124,11 +125,6 @@ def run(sf_dir: str, only=()) -> list[str]:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    # Python UDF workers do not inherit sys.path; without the repo on
-    # PYTHONPATH, UDF queries fail to import xboard_spark when the check
-    # runs from outside the repo
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (REPO, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark("oracle-check")
     failures = []
     for name, fn in qs.items():
@@ -147,7 +143,7 @@ def run(sf_dir: str, only=()) -> list[str]:
                 scols = sdf.columns
                 srows = [tuple(r) for r in sdf.collect()]
             except Exception as e:
-                print(f"FAIL {name}: spark error: {e}")
+                print(f"FAIL {name}: spark error: {error_line(e)}")
                 failures.append(name)
                 continue
             if name not in oracles:
@@ -158,7 +154,7 @@ def run(sf_dir: str, only=()) -> list[str]:
                 dcols = [d[0] for d in res.description]
                 drows = res.fetchall()
             except Exception as e:
-                print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
+                print(f"FAIL {name}: duckdb error: {error_line(e)}")
                 failures.append(name)
                 continue
             dt = time.time() - t0
@@ -184,7 +180,7 @@ def run(sf_dir: str, only=()) -> list[str]:
                 pdf_s = sdf.toPandas()
                 pdf_d = con.execute(oracles[name]).df()
             except Exception as e:
-                print(f"FAIL {name}: pandas-path error: {str(e)[:300]}")
+                print(f"FAIL {name}: pandas-path error: {error_line(e)}")
                 failures.append(name)
                 continue
             dmis = _dtype_mismatches(pdf_s, pdf_d)

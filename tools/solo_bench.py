@@ -4,7 +4,7 @@ methodology the round notes use to confirm/deny driver-bench drift
 
 Usage: python tools/solo_bench.py <query>[,<query>...] [n_attempts] [sf_dir]
 Prints one JSON line per query:
-{"query": ..., "attempts": [...], "cold": ..., "min": ...}.
+{"query": ..., "attempts": [...], "cold": ..., "min": ..., "misses": [...]}.
 (Several comma-separated queries share one session + warmup — the
 per-attempt protocol, ``reset``, is identical either way.)
 
@@ -12,7 +12,10 @@ Every attempt starts with cleared cached frames and index caches, but the
 generated-class cache (``spark.sql.codegen.cache.maxEntries``) is JVM-wide
 and outlives them: attempt 1 (``cold``) compiles every class the query
 does not share with earlier work in this JVM, later attempts reuse them,
-so ``min`` is a warm-codegen figure.
+so ``min`` is a warm-codegen figure. ``misses`` holds each attempt's
+session index cache builds (``xboard_spark.cache.stats()``): equal counts
+across attempts show that ``min`` is not served from a cache the earlier
+attempts built.
 """
 
 from __future__ import annotations
@@ -48,7 +51,11 @@ def main() -> None:
 
     import __spark_entry__ as entry
     from bench import warmup
+    from xboard_spark import cache
     from xboard_spark.session import get_spark
+
+    def misses() -> int:
+        return sum(s["misses"] for s in cache.stats().values())
 
     spark = get_spark()
     warmup(spark, sf_dir)
@@ -56,12 +63,13 @@ def main() -> None:
     registry = entry.queries()
     for qname in name.split(","):
         fn = registry[qname]
-        attempts = []
+        attempts, attempt_misses = [], []
         for _ in range(n):
             reset(spark)
-            t0 = time.time()
+            m0, t0 = misses(), time.time()
             fn(spark, sf_dir).collect()
             attempts.append(round(time.time() - t0, 3))
+            attempt_misses.append(misses() - m0)
         print(
             json.dumps(
                 {
@@ -69,6 +77,7 @@ def main() -> None:
                     "attempts": attempts,
                     "cold": attempts[0],
                     "min": min(attempts),
+                    "misses": attempt_misses,
                 }
             ),
             flush=True,

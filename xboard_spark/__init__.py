@@ -25,43 +25,24 @@ __version__ = "0.1.0"
 
 def clear_index_caches() -> int:
     """Unpersist and drop every in-session shared index artifact (shingle
-    index, LSH-verified pair set, LSH corpus, IVF and PQ indexes). The
-    caches make repeated queries cheap (the indexes ARE the product —
-    built once, consumed many times); this is the explicit release valve
-    for long-lived sessions that move on to a different corpus. Returns
-    the number of artifacts released.
+    index, LSH-verified pair set, cluster labels, LSH corpus, IVF and PQ
+    indexes, graph edge frames): ``release_all()`` on every cache
+    registered in ``xboard_spark.cache``. The caches make repeated queries
+    cheap (the indexes ARE the product — built once, consumed many
+    times); this is the explicit release valve for long-lived sessions
+    that move on to a different corpus. Returns the number of frames
+    released.
 
-    Since round 9 each cache is a ``BoundedFrameCache`` (per-type LRU,
-    unpersist-on-evict — see ``xboard_spark/cache.py``), so a session
-    that never calls this no longer leaks persisted frames without
-    bound; this function remains the immediate full release.
+    Each cache is a ``BoundedFrameCache`` (per-type LRU, unpersist-on-
+    evict), so a session that never calls this does not leak persisted
+    frames without bound; this function is the immediate full release.
 
     Caveat: cache keys are ``DataFrame.semanticHash()`` of the source plan
-    (plus the index parameters). The hash identifies the PLAN, not the
-    bytes behind it — if files at the same path are overwritten mid-session
-    the cache serves the stale persisted index; call this function after
-    any in-place rewrite. (At scale the index is a persisted table whose
-    freshness is owned by the pipeline, so the in-session analogue keeps
-    the same contract: explicit invalidation, not mtime-watching.)"""
-    from xboard_spark.operators import dedup, graph, linkage, similarity
+    (plus the index parameters), which identifies the PLAN, not the bytes
+    behind it. ``io.read_table`` calls this function itself when it
+    reopens a path whose files changed. For a frame NOT opened through
+    ``read_table`` whose files are overwritten mid-session, the cache
+    serves the stale index: call this function after such a rewrite."""
+    from xboard_spark.cache import registered
 
-    # release semantics live on BoundedFrameCache.release_all (unpersist
-    # + on_evict, which empties the star-rounds sidecars in lockstep)
-    return sum(
-        cache.release_all()
-        for cache in (
-            dedup._INDEX_CACHE,
-            dedup._PAIRS_CACHE,
-            dedup._CLUSTERS_CACHE,
-            graph._EDGE_CACHE,
-            graph._RAW_EDGE_CACHE,
-            graph._ORIENTED_CACHE,
-            graph._KW_GRAPH_CACHE,
-            linkage._FUZZY_PAIRS_CACHE,
-            linkage._ENTITY_CLUSTERS_CACHE,
-            similarity._NORM_CACHE,
-            similarity._CORPUS_CACHE,
-            similarity._IVF_CACHE,
-            similarity._PQ_CACHE,
-        )
-    )
+    return sum(cache.release_all() for cache in registered())

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from xboard_spark import clear_index_caches
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -115,6 +117,12 @@ def _nanos_timestamp_cols(path: str) -> set[str]:
 # rewriting a dir) never see a stale schema or file set.
 _TABLE_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
 _TABLE_CACHE_MAX = 64
+# abspath -> the file signature read_table last opened there. A reopen with
+# another signature is an in-place rewrite: the new handle has the old
+# one's plan semanticHash, so the index caches keyed by it are released
+# rather than serve the old bytes. Unbounded: a rewrite must be seen however
+# long ago the path was first opened.
+_OPENED: dict[str, tuple] = {}
 
 
 def _table_signature(path: str) -> tuple:
@@ -156,11 +164,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     * ``timestamp[us, UTC]`` — already TimestampType, no-op.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        _table_signature(path),
-    )
+    apath, sig = os.path.abspath(path), _table_signature(path)
+    if _OPENED.get(apath, sig) != sig:
+        clear_index_caches()
+    _OPENED[apath] = sig
+    key = (spark.sparkContext.applicationId, apath, sig)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         _TABLE_CACHE.move_to_end(key)

@@ -132,29 +132,22 @@ def shingle_index(documents: DataFrame, n: int = 3) -> DataFrame:
 # reusable artifact — at scale it would be a bucketed table on disk;
 # in-session the persisted frame plays that role. semanticHash covers the
 # source paths + plan, so a different sf_dir misses the cache correctly.
-_INDEX_CACHE: dict[tuple[int, int, int], DataFrame] = BoundedFrameCache()
+_INDEX_CACHE = BoundedFrameCache("dedup.index")
 # (documents semanticHash, n, n_perms, n_bands, max_df) -> persisted
 # LSH-candidate pairs with exact Jaccard, BEFORE the tau filter (see
 # minhash_dedup_pairs).
-_PAIRS_CACHE: dict[tuple[int, int, int, int, int], DataFrame] = BoundedFrameCache()
+_PAIRS_CACHE = BoundedFrameCache("dedup.pairs")
 # (documents semanticHash, n, n_perms, n_bands, tau in micro-units,
-# max_df) -> persisted component labels of the verified pair graph. tau is
-# part of the key (unlike _PAIRS_CACHE, which stores unfiltered pairs and
-# filters on read) because the threshold changes the GRAPH the components
-# are computed over.
-# star-rounds diagnostic for each cached cluster frame, restored onto
-# ``components_star.last_rounds`` on cache hits (kept OUT of
-# _CLUSTERS_CACHE so clear_index_caches' unpersist loop only sees frames;
-# the cache's on_evict keeps the two keyed in lockstep)
-_CLUSTERS_ROUNDS: dict[tuple[int, int, int, int, int, int], int] = {}
-_CLUSTERS_CACHE: dict[tuple[int, int, int, int, int, int], DataFrame] = (
-    BoundedFrameCache(on_evict=lambda k: _CLUSTERS_ROUNDS.pop(k, None))
-)
+# max_df) -> (persisted component labels of the verified pair graph, star
+# rounds). tau is part of the key (unlike _PAIRS_CACHE, which stores
+# unfiltered pairs and filters on read) because the threshold changes the
+# GRAPH the components are computed over. The rounds count rides in the
+# entry so it is restored on hits and leaves with its frame.
+_CLUSTERS_CACHE = BoundedFrameCache("dedup.clusters")
 
 
 def cached_filtered_index(documents: DataFrame, n: int, max_df: int) -> DataFrame:
-    key = (documents.semanticHash(), n, max_df)
-    if key not in _INDEX_CACHE:
+    def build():
         # Materialize the unfiltered index ONCE before the df filter: the
         # batch filter shape references ``inv`` twice (stop-set aggregate +
         # anti-join probe), and without a lineage cut the optimizer
@@ -165,8 +158,9 @@ def cached_filtered_index(documents: DataFrame, n: int, max_df: int) -> DataFram
         # smaller than the text it came from; at 100 TB this is the
         # "materialize the proxy, scan the payload once" shape of guide §8.
         inv = shingle_index(documents, n).localCheckpoint(eager=True)
-        _INDEX_CACHE[key] = filtered_index(inv, max_df).persist()
-    return _INDEX_CACHE[key]
+        return filtered_index(inv, max_df).persist()
+
+    return _INDEX_CACHE.memo(documents, (n, max_df), build)
 
 
 def filtered_index(inv: DataFrame, max_df: int) -> DataFrame:
@@ -368,36 +362,30 @@ def minhash_dedup_pairs(
     verify -> filter tau. Output matches ``ngram_jaccard_pairs`` on recalled
     pairs; LSH trades recall for never comparing all pairs.
     """
-    key = (documents.semanticHash(), n, n_perms, n_bands, max_df)
-    if key in _PAIRS_CACHE:
-        return (
-            _PAIRS_CACHE[key]
-            .filter(F.col("jaccard") >= tau)
-            .orderBy("doc_a", "doc_b")
+    def build():
+        # persisted + cross-query shared for the same multi-consumer
+        # reason as ngram_jaccard_pairs
+        inv = cached_filtered_index(documents, n, max_df)
+        sigs = minhash_signatures(inv, n_perms)
+        exploded = band_hashes(sigs, n_perms, n_bands)
+        left = exploded.select("band", "bh", F.col("doc_id").alias("doc_a"))
+        right = exploded.select("band", "bh", F.col("doc_id").alias("doc_b"))
+        candidates = (
+            left.join(right, ["band", "bh"])
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+            .distinct()
         )
-    # persisted + cross-query shared for the same multi-consumer reason as
-    # ngram_jaccard_pairs
-    inv = cached_filtered_index(documents, n, max_df)
-    sigs = minhash_signatures(inv, n_perms)
-    exploded = band_hashes(sigs, n_perms, n_bands)
-    left = exploded.select("band", "bh", F.col("doc_id").alias("doc_a"))
-    right = exploded.select("band", "bh", F.col("doc_id").alias("doc_b"))
-    candidates = (
-        left.join(right, ["band", "bh"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # cache the tau-INDEPENDENT verified pair set (tau=0 keeps every
-    # candidate with its exact Jaccard): minhash_dedup and the curation
-    # pipeline ask for different thresholds over the same corpus, and the
-    # expensive parts — banding, candidate join, Jaccard verify — do not
-    # depend on tau. The final filter is a per-row predicate on the small
-    # pair set.
-    _PAIRS_CACHE[key] = _pair_jaccard(inv, candidates, 0.0).persist()
-    return (
-        _PAIRS_CACHE[key].filter(F.col("jaccard") >= tau).orderBy("doc_a", "doc_b")
-    )
+        # cache the tau-INDEPENDENT verified pair set (tau=0 keeps every
+        # candidate with its exact Jaccard): minhash_dedup and the curation
+        # pipeline ask for different thresholds over the same corpus, and
+        # the expensive parts — banding, candidate join, Jaccard verify —
+        # do not depend on tau. The final filter is a per-row predicate on
+        # the small pair set.
+        return _pair_jaccard(inv, candidates, 0.0).persist()
+
+    pairs = _PAIRS_CACHE.memo(documents, (n, n_perms, n_bands, max_df), build)
+    return pairs.filter(F.col("jaccard") >= tau).orderBy("doc_a", "doc_b")
 
 
 def simhash_col(fps_col: str, bits: int = 16) -> Column:
@@ -731,23 +719,21 @@ def dedup_clusters(
     ).select("doc_a", "doc_b")
     if max_iters is not None:
         return min_label_components(pairs, max_iters)
-    key = (
-        documents.semanticHash(),
-        n,
-        n_perms,
-        n_bands,
-        int(round(tau * 1_000_000)),
-        max_df,
+    labels, components_star.last_rounds = _CLUSTERS_CACHE.memo(
+        documents,
+        (n, n_perms, n_bands, int(round(tau * 1_000_000)), max_df),
+        lambda: star_entry(pairs),
     )
-    if key not in _CLUSTERS_CACHE:
-        _CLUSTERS_CACHE[key] = components_star(pairs).persist()
-        _CLUSTERS_ROUNDS[key] = components_star.last_rounds
-    else:
-        # restore the rounds diagnostic on cache hits — otherwise
-        # ``components_star.last_rounds`` silently retains the value
-        # from an earlier, possibly unrelated invocation
-        components_star.last_rounds = _CLUSTERS_ROUNDS[key]
-    return _CLUSTERS_CACHE[key]
+    return labels
+
+
+def star_entry(pairs: DataFrame) -> tuple[DataFrame, int]:
+    """(persisted ``components_star`` labels, its rounds): a cluster-cache
+    entry. A warm hit unpacks the rounds back onto
+    ``components_star.last_rounds``, so the diagnostic describes the frame
+    returned, not whatever unrelated invocation ran last."""
+    labels = components_star(pairs).persist()
+    return labels, components_star.last_rounds
 
 
 def min_label_components(

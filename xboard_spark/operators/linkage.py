@@ -42,14 +42,9 @@ from xboard_spark.cache import BoundedFrameCache
 # dedup pair index, refreshed with the corpus; in-session the analogue is
 # a persist + explicit release via ``clear_index_caches`` (same contract
 # as dedup._PAIRS_CACHE/_CLUSTERS_CACHE).
-_FUZZY_PAIRS_CACHE: dict[tuple[int, int], DataFrame] = BoundedFrameCache()
-# star-rounds diagnostic sidecar, restored on cache hits (kept out of the
-# frame caches so clear_index_caches' unpersist loop only sees frames;
-# the cluster cache's on_evict keeps the two keyed in lockstep)
-_ENTITY_ROUNDS: dict[tuple[int, int], int] = {}
-_ENTITY_CLUSTERS_CACHE: dict[tuple[int, int], DataFrame] = BoundedFrameCache(
-    on_evict=lambda k: _ENTITY_ROUNDS.pop(k, None)
-)
+_FUZZY_PAIRS_CACHE = BoundedFrameCache("linkage.fuzzy_pairs")
+# entries are (labels, star rounds), as in dedup._CLUSTERS_CACHE
+_ENTITY_CLUSTERS_CACHE = BoundedFrameCache("linkage.entity_clusters")
 
 
 def _deletion_neighborhood(name_col: str) -> F.Column:
@@ -77,86 +72,84 @@ def fuzzy_customer_pairs(customer: DataFrame, max_dist: int = 1) -> DataFrame:
     once, shared by every consumer in the session (see module-level
     cache comment); the orderBy stays outside the cache so the persisted
     frame is the cheap unordered form."""
-    key = (customer.semanticHash(), max_dist)
-    if key in _FUZZY_PAIRS_CACHE:
-        return _ordered_pairs(_FUZZY_PAIRS_CACHE[key])
-    probe = customer.select("c_custkey", "c_name", "c_nationkey")
-    if max_dist == 1:
-        # The variant frame the self-join shuffles is NARROW on purpose:
-        # (custkey, 8-byte hash of (nationkey, variant)) — names never
-        # ride the ~(len+1)-way explode, and the candidate distinct
-        # dedups 16-byte rows instead of 5 string columns. A hash
-        # collision can only ADD a false candidate (within or across
-        # nations), and every candidate is verified by the exact
-        # nationkey-equality + Levenshtein filter after the name
-        # join-back, so the output is provably identical. Measured at
-        # sf0.1: 2.18s -> 1.15s, same 10435 pairs.
-        variants = probe.select(
-            "c_custkey",
-            "c_nationkey",
-            F.explode(_deletion_neighborhood("c_name")).alias("v"),
-        ).select(
-            "c_custkey",
-            F.xxhash64("c_nationkey", "v").alias("vh"),
-        )
-        a = variants.alias("a")
-        b = variants.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.vh") == F.col("b.vh"))
-                & (F.col("a.c_custkey") < F.col("b.c_custkey")),
+    def build():
+        probe = customer.select("c_custkey", "c_name", "c_nationkey")
+        if max_dist == 1:
+            # The variant frame the self-join shuffles is NARROW on purpose:
+            # (custkey, 8-byte hash of (nationkey, variant)) — names never
+            # ride the ~(len+1)-way explode, and the candidate distinct
+            # dedups 16-byte rows instead of 5 string columns. A hash
+            # collision can only ADD a false candidate (within or across
+            # nations), and every candidate is verified by the exact
+            # nationkey-equality + Levenshtein filter after the name
+            # join-back, so the output is provably identical. Measured at
+            # sf0.1: 2.18s -> 1.15s, same 10435 pairs.
+            variants = probe.select(
+                "c_custkey",
+                "c_nationkey",
+                F.explode(_deletion_neighborhood("c_name")).alias("v"),
+            ).select(
+                "c_custkey",
+                F.xxhash64("c_nationkey", "v").alias("vh"),
             )
-            .select(
-                F.col("a.c_custkey").alias("custkey_a"),
-                F.col("b.c_custkey").alias("custkey_b"),
+            a = variants.alias("a")
+            b = variants.alias("b")
+            cand = (
+                a.join(
+                    b,
+                    (F.col("a.vh") == F.col("b.vh"))
+                    & (F.col("a.c_custkey") < F.col("b.c_custkey")),
+                )
+                .select(
+                    F.col("a.c_custkey").alias("custkey_a"),
+                    F.col("b.c_custkey").alias("custkey_b"),
+                )
+                .distinct()
             )
-            .distinct()
-        )
-        na = probe.select(
-            F.col("c_custkey").alias("custkey_a"),
-            F.col("c_name").alias("name_a"),
-            F.col("c_nationkey").alias("nationkey"),
-        )
-        nb = probe.select(
-            F.col("c_custkey").alias("custkey_b"),
-            F.col("c_name").alias("name_b"),
-            F.col("c_nationkey").alias("nationkey_b"),
-        )
-        pairs = (
-            cand.join(na, "custkey_a")
-            .join(nb, "custkey_b")
-            .filter(F.col("nationkey") == F.col("nationkey_b"))
-            .withColumn("name_dist", F.levenshtein("name_a", "name_b"))
-            .filter(F.col("name_dist") <= 1)
-        )
-    else:
-        a = probe.alias("a")
-        b = probe.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
-                & (F.col("a.c_custkey") < F.col("b.c_custkey")),
+            na = probe.select(
+                F.col("c_custkey").alias("custkey_a"),
+                F.col("c_name").alias("name_a"),
+                F.col("c_nationkey").alias("nationkey"),
             )
-            .select(
-                F.col("a.c_nationkey").alias("nationkey"),
-                F.col("a.c_custkey").alias("custkey_a"),
-                F.col("b.c_custkey").alias("custkey_b"),
-                F.levenshtein(F.col("a.c_name"), F.col("b.c_name")).alias(
-                    "name_dist"
-                ),
+            nb = probe.select(
+                F.col("c_custkey").alias("custkey_b"),
+                F.col("c_name").alias("name_b"),
+                F.col("c_nationkey").alias("nationkey_b"),
             )
-            .filter(F.col("name_dist") <= max_dist)
-        )
-    flat = pairs.select(
-        F.col("nationkey").cast("long").alias("nationkey"),
-        "custkey_a",
-        "custkey_b",
-        F.col("name_dist").cast("long").alias("name_dist"),
-    )
-    _FUZZY_PAIRS_CACHE[key] = flat.persist()
-    return _ordered_pairs(flat)
+            pairs = (
+                cand.join(na, "custkey_a")
+                .join(nb, "custkey_b")
+                .filter(F.col("nationkey") == F.col("nationkey_b"))
+                .withColumn("name_dist", F.levenshtein("name_a", "name_b"))
+                .filter(F.col("name_dist") <= 1)
+            )
+        else:
+            a = probe.alias("a")
+            b = probe.alias("b")
+            pairs = (
+                a.join(
+                    b,
+                    (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
+                    & (F.col("a.c_custkey") < F.col("b.c_custkey")),
+                )
+                .select(
+                    F.col("a.c_nationkey").alias("nationkey"),
+                    F.col("a.c_custkey").alias("custkey_a"),
+                    F.col("b.c_custkey").alias("custkey_b"),
+                    F.levenshtein(F.col("a.c_name"), F.col("b.c_name")).alias(
+                        "name_dist"
+                    ),
+                )
+                .filter(F.col("name_dist") <= max_dist)
+            )
+        return pairs.select(
+            F.col("nationkey").cast("long").alias("nationkey"),
+            "custkey_a",
+            "custkey_b",
+            F.col("name_dist").cast("long").alias("name_dist"),
+        ).persist()
+
+    return _ordered_pairs(_FUZZY_PAIRS_CACHE.memo(customer, (max_dist,), build))
 
 
 def _ordered_pairs(flat: DataFrame) -> DataFrame:
@@ -180,21 +173,20 @@ def customer_entity_clusters(customer: DataFrame, max_dist: int = 1) -> DataFram
     hypothesis-proven output-identical. The component LABELS are cached
     under the same (corpus plan, max_dist) key as the pair set — warm
     calls skip both the Levenshtein candidate join and the star loop
-    (``components_star.last_rounds`` is restored from the sidecar on
+    (``components_star.last_rounds`` is restored from the cache entry on
     hits, same contract as ``dedup.dedup_clusters``)."""
-    from xboard_spark.operators.dedup import components_star
+    from xboard_spark.operators.dedup import components_star, star_entry
 
-    key = (customer.semanticHash(), max_dist)
-    if key not in _ENTITY_CLUSTERS_CACHE:
+    def build():
         pairs = fuzzy_customer_pairs(customer, max_dist).select(
             F.col("custkey_a").alias("doc_a"),
             F.col("custkey_b").alias("doc_b"),
         )
-        _ENTITY_CLUSTERS_CACHE[key] = components_star(pairs).persist()
-        _ENTITY_ROUNDS[key] = components_star.last_rounds
-    else:
-        components_star.last_rounds = _ENTITY_ROUNDS[key]
-    comp = _ENTITY_CLUSTERS_CACHE[key]
+        return star_entry(pairs)
+
+    comp, components_star.last_rounds = _ENTITY_CLUSTERS_CACHE.memo(
+        customer, (max_dist,), build
+    )
     return (
         comp.groupBy(F.col("cluster_id").alias("entity_id"))
         .agg(

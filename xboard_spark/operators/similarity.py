@@ -84,7 +84,7 @@ def _norm(a: Column) -> Column:
 # bucket-free base every similarity operator shares. Separate from the
 # bucketed index so exact operators (knn_bruteforce) keep a pure-JVM
 # lineage — their plans must stay Python-free (asserted in test_plans).
-_NORM_CACHE: dict[int, DataFrame] = BoundedFrameCache()
+_NORM_CACHE = BoundedFrameCache("similarity.norm")
 
 # (embeddings semanticHash, n_planes, n_tables, arrow) -> persisted
 # norm+bucket-annotated corpus. The annotated corpus IS the LSH index:
@@ -94,7 +94,7 @@ _NORM_CACHE: dict[int, DataFrame] = BoundedFrameCache()
 # params are part of the key: buckets built with a different plane/table
 # count — or a different builder — are a DIFFERENT index, and serving
 # them silently would corrupt candidate sets.
-_CORPUS_CACHE: dict[tuple[int, int, int, bool], DataFrame] = BoundedFrameCache()
+_CORPUS_CACHE = BoundedFrameCache("similarity.corpus")
 
 
 def _norm_corpus(embeddings: DataFrame) -> DataFrame:
@@ -107,15 +107,15 @@ def _norm_corpus(embeddings: DataFrame) -> DataFrame:
     deep in the Python worker (found by the round-10 NULL-heavy sweep).
     Excluding at the shared root keeps every consumer (LSH corpus, IVF,
     PQ, brute force) consistent about which rows exist."""
-    key = embeddings.semanticHash()
-    if key not in _NORM_CACHE:
-        _NORM_CACHE[key] = (
+    def build():
+        return (
             embeddings.filter(F.col("embedding").isNotNull())
             .select("vec_id", _as_double(F.col("embedding")).alias("v"))
             .withColumn("v_norm", _norm(F.col("v")))
             .persist()
         )
-    return _NORM_CACHE[key]
+
+    return _NORM_CACHE.memo(embeddings, (), build)
 
 
 def _plane_matrix(n_total: int, dim: int = DIM) -> np.ndarray:
@@ -177,8 +177,7 @@ def lsh_corpus(
     probability p = 1 - angle/pi. At 100 TB each table is the corpus
     written partitioned by its bucket column — T copies, the classic
     space-for-recall trade."""
-    key = (embeddings.semanticHash(), n_planes, n_tables, arrow)
-    if key not in _CORPUS_CACHE:
+    def build():
         n_total = n_planes * n_tables
         vecs = _norm_corpus(embeddings)
         # mean vector via posexplode + 64-group avg (one tiny shuffle):
@@ -221,10 +220,9 @@ def lsh_corpus(
                 out = out.withColumn(
                     f"bucket_{t}", _bucket(F.col("v"), t, n_planes)
                 )
-        _CORPUS_CACHE[key] = out.drop(
-            *[f"o_{p}" for p in range(n_total)]
-        ).persist()
-    return _CORPUS_CACHE[key]
+        return out.drop(*[f"o_{p}" for p in range(n_total)]).persist()
+
+    return _CORPUS_CACHE.memo(embeddings, (n_planes, n_tables, arrow), build)
 
 
 def knn_bruteforce(
@@ -567,9 +565,7 @@ def _update(vec_dims: DataFrame, assign: DataFrame) -> DataFrame:
 # expensive shared artifact — knn_ivf and ivf_cell_sizes both need it, and
 # production would build it once offline and store it; the in-session
 # cache plays that role (same rationale as dedup._INDEX_CACHE).
-_IVF_CACHE: dict[tuple[int, int], tuple[DataFrame, ...]] = (
-    BoundedFrameCache()
-)
+_IVF_CACHE = BoundedFrameCache("similarity.ivf")
 
 
 def ivf_index(
@@ -578,8 +574,12 @@ def ivf_index(
     """One deterministic Lloyd iteration from hash-seeded centroids:
     returns (updated centroids (cell, dim, cval), final assignment
     (vec_id, cell)), cached per (corpus, n_cells)."""
-    key = (embeddings.semanticHash(), n_cells)
-    if key not in _IVF_CACHE:
+    return _ivf_entry(embeddings, n_cells)[:2]
+
+
+def _ivf_entry(embeddings: DataFrame, n_cells: int) -> tuple[DataFrame, ...]:
+    """The cached IVF entry (c1, assign, vd, corpus, c1_arr)."""
+    def build():
         spark = embeddings.sparkSession
         vd = _vec_dims(embeddings).persist()
         c0 = initial_centroids(spark, n_cells)
@@ -610,23 +610,22 @@ def ivf_index(
             .select("cell", F.expr("transform(sc, x -> x.cval)").alias("cvec"))
             .persist()
         )
-        _IVF_CACHE[key] = (c1, assign, vd, corpus, c1_arr)
-    return _IVF_CACHE[key][:2]
+        return c1, assign, vd, corpus, c1_arr
+
+    return _IVF_CACHE.memo(embeddings, (n_cells,), build)
 
 
 def ivf_corpus(embeddings: DataFrame, n_cells: int = N_CELLS) -> DataFrame:
     """The persisted probe-ready corpus (vec_id, v, v_norm, cell) from the
     shared IVF index entry — see ivf_index for why it lives in the cache."""
-    ivf_index(embeddings, n_cells)
-    return _IVF_CACHE[(embeddings.semanticHash(), n_cells)][3]
+    return _ivf_entry(embeddings, n_cells)[3]
 
 
 def ivf_centroid_vectors(
     embeddings: DataFrame, n_cells: int = N_CELLS
 ) -> DataFrame:
     """(cell, cvec array<double>) from the shared IVF index entry."""
-    ivf_index(embeddings, n_cells)
-    return _IVF_CACHE[(embeddings.semanticHash(), n_cells)][4]
+    return _ivf_entry(embeddings, n_cells)[4]
 
 
 def knn_ivf(
@@ -761,9 +760,7 @@ PQ_K = 4  # centroids per subspace codebook
 # knn_pq (same build-once rationale as _IVF_CACHE). dim is part of the key:
 # the subspace split depends on it, so codes built for one dim are invalid
 # for another.
-_PQ_CACHE: dict[
-    tuple[int, int, int, int], tuple[DataFrame, DataFrame, DataFrame]
-] = BoundedFrameCache()
+_PQ_CACHE = BoundedFrameCache("similarity.pq")
 
 
 def pq_index(
@@ -772,8 +769,7 @@ def pq_index(
     """Learn the PQ index: one Lloyd iteration per subspace from
     hash-seeded centroids. Returns (codebooks (s, c, dim, cval),
     codes (vec_id, s, c), subspaced vec dims (vec_id, s, dim, val))."""
-    key = (embeddings.semanticHash(), m, k, dim)
-    if key not in _PQ_CACHE:
+    def build():
         spark = embeddings.sparkSession
         sub_dim = dim // m
         vd = (
@@ -814,8 +810,9 @@ def pq_index(
             .agg(F.avg("val").alias("cval"))
             .persist()
         )
-        _PQ_CACHE[key] = (c1, assign(c1).persist(), vd)
-    return _PQ_CACHE[key]
+        return c1, assign(c1).persist(), vd
+
+    return _PQ_CACHE.memo(embeddings, (m, k, dim), build)
 
 
 def pq_quantization_stats(

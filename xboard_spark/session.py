@@ -21,6 +21,11 @@ environment variables for local testing:
   one pass over the full ``__spark_entry__.queries()`` registry at sf0.01
   compiles 2639 distinct classes, a ``perfbench`` ``corpus`` run 307 and a
   ``dashboard`` run 164.
+- The package root on ``PYTHONPATH``: Python UDF workers do not inherit
+  the driver's ``sys.path``; the JVM hands them its own environment, which
+  it copies from this process when it starts. Without the export, a UDF
+  query run from outside the repo fails with ``No module named
+  'xboard_spark'``.
 """
 
 from __future__ import annotations
@@ -37,6 +42,8 @@ from pyspark.sql import SparkSession
 # differs per run) instead of 3961 at Spark's default.
 CODEGEN_CACHE_MAX_ENTRIES = 6000
 
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "xboard-spark",
@@ -45,6 +52,12 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession."""
+    # before getOrCreate: a JVM, once started, keeps its environment
+    pythonpath = os.environ.get("PYTHONPATH", "")
+    if PACKAGE_ROOT not in pythonpath.split(os.pathsep):
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (PACKAGE_ROOT, pythonpath) if p
+        )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
