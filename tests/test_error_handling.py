@@ -247,3 +247,32 @@ def test_watermark_profile_excludes_unidentified_events(spark):
     )
     r = watermark_delay_profile(ev).collect()[0]
     assert r.n_events == 2 and r.n_late == 1
+
+
+def test_ansi_errors_stay_loud_without_the_python_call_site(spark):
+    """Sessions from ``get_spark`` do not capture Python call sites: a
+    runtime error still raises with its condition and the name of the
+    DataFrame operation that built the failing expression."""
+    import importlib.util
+    import pathlib
+
+    import pytest
+
+    path = pathlib.Path(__file__).resolve().parent.parent / "bench.py"
+    spec = importlib.util.spec_from_file_location("bench", path)
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    df = spark.createDataFrame([(1, 0)], "n int, d int")
+    with pytest.raises(Exception) as div:
+        df.select(F.col("n") / F.col("d")).collect()
+    with pytest.raises(Exception) as cast:
+        df.select(F.lit("abc").cast("int").alias("v")).collect()
+    for caught, condition, op in (
+        (div, "DIVIDE_BY_ZERO", '"divide" was called from'),
+        (cast, "CAST_INVALID_INPUT", '"cast" was called from'),
+    ):
+        assert caught.value.getCondition() == condition
+        assert op in str(caught.value)
+    line = bench.error_line(div.value)
+    assert line.startswith("ArithmeticException: [DIVIDE_BY_ZERO]")

@@ -1,12 +1,14 @@
 """Measurement and fixture tools keep the invariants their docstrings
-claim: solo_bench's per-attempt reset really empties the index caches, the
-scaling-probe generator refuses keys that would collide across copies, and
-check_oracle — like anything that builds its session with ``get_spark`` —
-runs UDF queries from any working directory."""
+claim: solo_bench's per-attempt reset really empties the index caches and
+each attempt records its build time, the scaling-probe generator refuses
+keys that would collide across copies, and check_oracle — like anything
+that builds its session with ``get_spark`` — runs UDF queries from any
+working directory."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 import pathlib
 import subprocess
@@ -34,6 +36,18 @@ def test_solo_bench_reset_empties_index_caches(spark, sf_dir):
     assert len(dedup._INDEX_CACHE) > 0
     solo_bench.reset(spark)
     assert len(dedup._INDEX_CACHE) == 0
+
+
+def test_solo_bench_reports_build_time_per_attempt(spark, sf_dir, monkeypatch, capsys):
+    # build: seconds until the query function returned its DataFrame, one
+    # per attempt, never more than the attempt's total
+    solo_bench = _tool("solo_bench")
+    monkeypatch.setattr(sys, "argv", ["solo_bench", "minhash_dedup", "2", sf_dir])
+    solo_bench.main()
+    rec = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert len(rec["build"]) == len(rec["attempts"]) == 2
+    assert all(0 <= b <= t for b, t in zip(rec["build"], rec["attempts"]))
+    assert set(rec) >= {"query", "attempts", "cold", "min", "misses"}
 
 
 def test_scale_probe_rejects_keys_that_would_collide():

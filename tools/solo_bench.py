@@ -4,7 +4,8 @@ methodology the round notes use to confirm/deny driver-bench drift
 
 Usage: python tools/solo_bench.py <query>[,<query>...] [n_attempts] [sf_dir]
 Prints one JSON line per query:
-{"query": ..., "attempts": [...], "cold": ..., "min": ..., "misses": [...]}.
+{"query": ..., "attempts": [...], "cold": ..., "min": ..., "misses": [...],
+"build": [...]}.
 (Several comma-separated queries share one session + warmup — the
 per-attempt protocol, ``reset``, is identical either way.)
 
@@ -15,7 +16,11 @@ does not share with earlier work in this JVM, later attempts reuse them,
 so ``min`` is a warm-codegen figure. ``misses`` holds each attempt's
 session index cache builds (``xboard_spark.cache.stats()``): equal counts
 across attempts show that ``min`` is not served from a cache the earlier
-attempts built.
+attempts built. ``build`` holds each attempt's seconds until
+``fn(spark, sf_dir)`` returned its DataFrame: Python plan construction plus
+any eager side jobs it runs (``localCheckpoint(eager=True)``,
+``collect()`` calls), the rest of the attempt being Catalyst, execution and
+result transfer of the final ``collect()``.
 """
 
 from __future__ import annotations
@@ -63,11 +68,13 @@ def main() -> None:
     registry = entry.queries()
     for qname in name.split(","):
         fn = registry[qname]
-        attempts, attempt_misses = [], []
+        attempts, attempt_misses, builds = [], [], []
         for _ in range(n):
             reset(spark)
             m0, t0 = misses(), time.time()
-            fn(spark, sf_dir).collect()
+            df = fn(spark, sf_dir)
+            builds.append(round(time.time() - t0, 3))
+            df.collect()
             attempts.append(round(time.time() - t0, 3))
             attempt_misses.append(misses() - m0)
         print(
@@ -78,6 +85,7 @@ def main() -> None:
                     "cold": attempts[0],
                     "min": min(attempts),
                     "misses": attempt_misses,
+                    "build": builds,
                 }
             ),
             flush=True,

@@ -7,7 +7,8 @@ seeding, which no oracle can reproduce, so instead we fingerprint with
 ``md5`` (available in both engines) and fold the first 15 hex chars into a
 non-negative int64 (60 bits, always < 2**63):
 
-- Spark:  ``conv(substring(md5(s), 1, 15), 16, 10)`` cast to long.
+- Spark:  ``conv(substring(md5(s), 1, 15), 16, 10)`` cast to long, as Column
+  code (``fingerprint64``) and as SQL text (``fingerprint64_sql``).
 - DuckDB: ``('0x' || substr(md5(s), 1, 15))::BIGINT``.
 
 md5 runs JVM-side in Spark (whole-stage codegen, no Python) — fingerprinting
@@ -57,17 +58,13 @@ def fingerprint64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def fingerprint64_sql(sql_expr: str) -> str:
+    """Spark SQL text for ``fingerprint64`` of a string expr: the same fold,
+    for plans built as one SQL expression (one gateway call to parse instead
+    of one per Column method)."""
+    return f"CAST(conv(substring(md5({sql_expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def duck_fingerprint64(sql_expr: str) -> str:
     """DuckDB SQL producing the identical fingerprint for a string expr."""
     return f"(('0x' || substr(md5({sql_expr}), 1, 15))::BIGINT)"
-
-
-def minhash_expr(fp_col: Column, a: int, b: int) -> Column:
-    """Spark: one permutation hash over a fingerprint column (int64-safe)."""
-    x = fp_col.bitwiseAND(F.lit(_X_MASK))
-    return (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
-
-
-def duck_minhash_expr(fp_sql: str, a: int, b: int) -> str:
-    """DuckDB SQL for the identical permutation hash."""
-    return f"((({fp_sql}) & {_X_MASK}) * {a} + {b}) % {MINHASH_P}"

@@ -31,6 +31,7 @@ from xboard_spark.functions.portable_hash import (
     MINHASH_P,
     _X_MASK,
     fingerprint64,
+    fingerprint64_sql,
     minhash_params,
 )
 from xboard_spark.operators.text import TOKEN_RE
@@ -309,12 +310,14 @@ def minhash_signatures(inv: DataFrame, n_perms: int = N_PERMS) -> DataFrame:
     """(doc_id, sig_0..sig_{n-1}): MinHash signatures over the filtered
     inverted index — one partial+final hash aggregate on doc_id with
     n_perms min() accumulators (map-side combine shrinks the shuffle to one
-    signature row per doc per input partition)."""
-    params = minhash_params(n_perms)
-    x = F.col("shfp").bitwiseAND(F.lit(_X_MASK))
+    signature row per doc per input partition).
+
+    Each accumulator is one SQL expression, not Column arithmetic: every
+    Column method is a py4j gateway round trip (about ten with PySpark's
+    call-site capture on), a SQL expression about four."""
     sig_aggs = [
-        F.min((x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(params)
+        F.expr(f"min(((shfp & {_X_MASK}) * {a} + {b}) % {MINHASH_P}) AS sig_{i}")
+        for i, (a, b) in enumerate(minhash_params(n_perms))
     ]
     return inv.groupBy("doc_id").agg(*sig_aggs)
 
@@ -325,25 +328,18 @@ def band_hashes(
     """(doc_id, band, bh): LSH band hashes from a signature frame — the
     banding step shared by the batch pair miner and the streaming
     incremental index (ONE definition, so a permutation or hash change
-    cannot silently diverge the two)."""
+    cannot silently diverge the two). Built as one SQL projection for the
+    same reason as ``minhash_signatures``'s accumulators."""
     rows_per_band = n_perms // n_bands
-    band_cols = []
+    bands = []
     for bi in range(n_bands):
-        parts = [
-            F.col(f"sig_{bi * rows_per_band + r}").cast("string")
+        parts = ", ".join(
+            f"CAST(sig_{bi * rows_per_band + r} AS STRING)"
             for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(bi).alias("band"),
-                fingerprint64(F.concat_ws(",", *parts)).alias("bh"),
-            )
         )
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("b")
-    ).select(
-        "doc_id", F.col("b.band").alias("band"), F.col("b.bh").alias("bh")
-    )
+        bh = fingerprint64_sql(f"concat_ws(',', {parts})")
+        bands.append(f"named_struct('band', {bi}, 'bh', {bh})")
+    return sigs.selectExpr("doc_id", f"inline(array({', '.join(bands)}))")
 
 
 def minhash_dedup_pairs(
