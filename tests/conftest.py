@@ -1,11 +1,14 @@
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, so a suite run from a second
+# checkout tests that checkout's package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from xboard_spark.session import get_spark
 
@@ -27,8 +30,6 @@ def spark():
     )
     yield s
 
-
-import os
 
 _TESTDATA_ROOT = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 

@@ -100,14 +100,13 @@ def test_sink_crash_before_index_commit_replays_same_pairs(spark, tmp_path, text
     assert {(1, 3), (2, 4)} <= replay
 
 
-def test_crash_between_sizes_and_inv_appends_replays_identically(
+def test_crash_between_bands_and_inv_appends_replays_identically(
     spark, tmp_path, texts
 ):
-    """The sizes sidecar's replay guard: a crash AFTER the bands and sizes
-    appends but BEFORE the inv commit marker leaves orphan sizes rows; the
-    replayed batch re-appends identical values and the dedup-on-read must
-    keep every pair's Jaccard exact (a duplicated sizes row would
-    otherwise duplicate its doc's pair rows)."""
+    """A crash AFTER the bands append but BEFORE the inv commit marker
+    leaves orphan band rows; the replayed batch must emit the same pairs
+    once each, with the Jaccards the batch operator computes (the doc
+    sizes come from the replayed batch's own index rows)."""
     base, near, other = texts
     idx = IncrementalDedupIndex(spark, str(tmp_path / "idx"))
     idx.add_batch(
@@ -131,9 +130,9 @@ def test_crash_between_sizes_and_inv_appends_replays_identically(
     with pytest.raises(AppendCrash):
         idx.add_batch(b2)
     idx._append = orig_append
-    # orphan state exists for batch-2 docs in bands and sizes, not in inv
+    # orphan state exists for batch-2 docs in bands, not in inv
     assert idx._read("inv").filter("doc_id >= 3").count() == 0
-    assert idx._read("sizes").filter("doc_id >= 3").count() > 0
+    assert idx._read("bands").filter("doc_id >= 3").count() > 0
 
     replay = idx.add_batch(b2).collect()
     got = {(r.doc_a, r.doc_b) for r in replay}
@@ -141,7 +140,7 @@ def test_crash_between_sizes_and_inv_appends_replays_identically(
     assert len(got) == len(replay)  # no duplicated pair rows
     # Jaccards match the batch operator exactly (no shingle is df-capped
     # in this 4-doc corpus, so the incremental and batch filtered sets
-    # coincide and the sidecar sizes must reproduce the groupBy exactly)
+    # and their sizes coincide)
     full = spark.createDataFrame(
         [(1, base), (2, other), (3, near), (4, other)],
         "doc_id long, text string",

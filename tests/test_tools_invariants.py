@@ -1,9 +1,9 @@
 """Measurement and fixture tools keep the invariants their docstrings
 claim: solo_bench's per-attempt reset really empties the index caches and
-each attempt records its build time, the scaling-probe generator refuses
-keys that would collide across copies, and check_oracle — like anything
-that builds its session with ``get_spark`` — runs UDF queries from any
-working directory."""
+each attempt records its build time and Spark job count, the
+scaling-probe generator refuses keys that would collide across copies,
+and check_oracle — like anything that builds its session with
+``get_spark`` — runs UDF queries from any working directory."""
 
 from __future__ import annotations
 
@@ -48,6 +48,8 @@ def test_solo_bench_reports_build_time_per_attempt(spark, sf_dir, monkeypatch, c
     assert len(rec["build"]) == len(rec["attempts"]) == 2
     assert all(0 <= b <= t for b, t in zip(rec["build"], rec["attempts"]))
     assert set(rec) >= {"query", "attempts", "cold", "min", "misses"}
+    # jobs: the Spark jobs launched under each attempt's own job group
+    assert len(rec["jobs"]) == 2 and all(j > 0 for j in rec["jobs"])
 
 
 def test_scale_probe_rejects_keys_that_would_collide():

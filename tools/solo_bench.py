@@ -5,7 +5,7 @@ methodology the round notes use to confirm/deny driver-bench drift
 Usage: python tools/solo_bench.py <query>[,<query>...] [n_attempts] [sf_dir]
 Prints one JSON line per query:
 {"query": ..., "attempts": [...], "cold": ..., "min": ..., "misses": [...],
-"build": [...]}.
+"build": [...], "jobs": [...]}.
 (Several comma-separated queries share one session + warmup — the
 per-attempt protocol, ``reset``, is identical either way.)
 
@@ -20,7 +20,10 @@ attempts built. ``build`` holds each attempt's seconds until
 ``fn(spark, sf_dir)`` returned its DataFrame: Python plan construction plus
 any eager side jobs it runs (``localCheckpoint(eager=True)``,
 ``collect()`` calls), the rest of the attempt being Catalyst, execution and
-result transfer of the final ``collect()``.
+result transfer of the final ``collect()``. ``jobs`` holds each attempt's
+Spark job count (layer 3), read through ``statusTracker`` for the job group
+the attempt runs under: eager side jobs of the build plus the jobs of the
+final ``collect()``.
 """
 
 from __future__ import annotations
@@ -64,19 +67,23 @@ def main() -> None:
 
     spark = get_spark()
     warmup(spark, sf_dir)
+    sc = spark.sparkContext
 
     registry = entry.queries()
     for qname in name.split(","):
         fn = registry[qname]
-        attempts, attempt_misses, builds = [], [], []
-        for _ in range(n):
+        attempts, attempt_misses, builds, jobs = [], [], [], []
+        for i in range(n):
             reset(spark)
+            group = f"solo_bench-{qname}-{i}"
+            sc.setJobGroup(group, qname)
             m0, t0 = misses(), time.time()
             df = fn(spark, sf_dir)
             builds.append(round(time.time() - t0, 3))
             df.collect()
             attempts.append(round(time.time() - t0, 3))
             attempt_misses.append(misses() - m0)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         print(
             json.dumps(
                 {
@@ -86,6 +93,7 @@ def main() -> None:
                     "min": min(attempts),
                     "misses": attempt_misses,
                     "build": builds,
+                    "jobs": jobs,
                 }
             ),
             flush=True,

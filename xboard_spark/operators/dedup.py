@@ -12,11 +12,14 @@ Scale design (the 100 TB story):
   a document-frequency cap (hot-key defense — without it one ubiquitous
   shingle produces a quadratic bucket), then pair-join *within shingle
   buckets* so candidate generation is bounded by sum(df^2) over surviving
-  shingles, not |docs|^2.
-- MinHash/LSH: signatures are computed per-document with array expressions
-  (zero shuffle), banding re-keys by (band, band_hash) — only same-bucket
-  docs ever meet, the textbook way brute-force O(n^2) near-dup becomes
-  tractable (Broder 1997; Leskovec et al., Mining of Massive Datasets ch.3).
+  shingles, not |docs|^2. Every index row carries its document's filtered
+  shingle count (doc_id, shfp, n_sh), paid once per build, so the Jaccard
+  and overlap consumers never re-aggregate sizes per call.
+- MinHash/LSH: signatures are one partial+final hash aggregate on doc_id
+  (one shuffle of at most one signature row per doc per map task);
+  banding re-keys by (band, band_hash) — only same-bucket docs ever meet,
+  the textbook way brute-force O(n^2) near-dup becomes tractable
+  (Broder 1997; Leskovec et al., Mining of Massive Datasets ch.3).
 """
 
 from __future__ import annotations
@@ -159,9 +162,20 @@ def cached_filtered_index(documents: DataFrame, n: int, max_df: int) -> DataFram
         # smaller than the text it came from; at 100 TB this is the
         # "materialize the proxy, scan the payload once" shape of guide §8.
         inv = shingle_index(documents, n).localCheckpoint(eager=True)
-        return filtered_index(inv, max_df).persist()
+        return with_doc_size(filtered_index(inv, max_df)).persist()
 
     return _INDEX_CACHE.memo(documents, (n, max_df), build)
+
+
+def with_doc_size(inv: DataFrame) -> DataFrame:
+    """(doc_id, shfp) -> (doc_id, shfp, n_sh): attach each document's
+    shingle count to its index rows. Applied AFTER the stop-shingle filter,
+    so ``n_sh`` is the size of the filtered set the Jaccard and overlap
+    scores divide by. One doc_id exchange of the index per build; every
+    consumer then reads sizes off its own rows instead of running a
+    doc_id aggregate and joining it back on each call."""
+    n_sh = F.count("*").over(Window.partitionBy("doc_id"))
+    return inv.select("doc_id", "shfp", n_sh.alias("n_sh"))
 
 
 def filtered_index(inv: DataFrame, max_df: int) -> DataFrame:
@@ -202,63 +216,24 @@ def filtered_index(inv: DataFrame, max_df: int) -> DataFrame:
 
 
 def _pair_jaccard(
-    inv: DataFrame,
-    candidates: DataFrame | None,
-    tau: float,
-    sizes: DataFrame | None = None,
+    inv: DataFrame, candidates: DataFrame | None, tau: float
 ) -> DataFrame:
     """Exact Jaccard over the filtered shingle sets, computed purely from
     inverted-index counts — no array materialization, no per-pair set
-    intersection. shared(a,b) = |index join|, sizes from a groupBy; every
-    step is a hash shuffle on a content key (scales linearly in index
-    size + candidate count).
-
-    The size aggregate deliberately runs over the FULL index even when a
-    candidate set is given: restricting it with a semi-join on the
-    candidate docs was tried (round 13) and measured as a REGRESSION —
-    the candidate frame is an unpersisted plan (bands self-join +
-    distinct), and referencing it two more times to build the key set
-    re-derives that whole subtree per reference, which costs far more
-    than the one map-side-combined groupBy over the index it saves.
-
-    ``sizes`` (doc_id, n_sh) lets a caller that MAINTAINS doc sizes as
-    state (the incremental streaming index) substitute its table for the
-    full-index aggregate — a doc's filtered shingle-set size is fixed the
-    moment it is indexed, so the stored values equal the groupBy exactly.
-    Batch callers leave it None."""
-    if sizes is None:
-        sizes = inv.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    intersection. shared(a,b) = |index join|; each side brings its own
+    set size (``n_sh`` of the index rows), so the size is a grouping key of
+    the shared-count aggregate, not a join. Every step is a hash shuffle on
+    a content key (scales linearly in index size + candidate count)."""
+    a = inv.select(F.col("doc_id").alias("doc_a"), "shfp", F.col("n_sh").alias("n_a"))
+    b = inv.select(F.col("doc_id").alias("doc_b"), "shfp", F.col("n_sh").alias("n_b"))
     if candidates is None:
-        a = inv.select(F.col("doc_id").alias("doc_a"), "shfp")
-        b = inv.select(F.col("doc_id").alias("doc_b"), "shfp")
-        shared = (
-            a.join(b, "shfp")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("shared"))
-        )
+        joined = a.join(b, "shfp").filter(F.col("doc_a") < F.col("doc_b"))
     else:
         # restrict the index join to the (small) LSH candidate set first
-        a = candidates.join(
-            inv.select(F.col("doc_id").alias("doc_a"), "shfp"), "doc_a"
-        )
-        shared = (
-            a.join(
-                inv.select(F.col("doc_id").alias("doc_b"), "shfp"),
-                ["doc_b", "shfp"],
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("shared"))
-        )
+        joined = candidates.join(a, "doc_a").join(b, ["doc_b", "shfp"])
     return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")),
-            "doc_b",
-        )
+        joined.groupBy("doc_a", "doc_b", "n_a", "n_b")
+        .agg(F.count("*").alias("shared"))
         .withColumn(
             "jaccard",
             F.round(
@@ -285,23 +260,24 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard near-dup pairs above ``tau`` via the
     stop-shingle-filtered inverted index.
 
-    The index is persisted (MEMORY_AND_DISK): the pair join, the size
-    aggregate, and the df filter all consume it, and without an explicit
-    persist each consumer re-derives the tokenize->window->fingerprint
-    subtree (ReuseExchange only dedups *identical* exchanges, and these
-    consumers shuffle on different keys). The index is 2 longs/row —
-    orders of magnitude smaller than the text it came from — and shared
-    with ``minhash_dedup_pairs`` via ``cached_filtered_index``.
+    The index is persisted (MEMORY_AND_DISK): both sides of the pair join
+    consume it, and without an explicit persist each consumer re-derives
+    the tokenize->window->fingerprint subtree (ReuseExchange only dedups
+    *identical* exchanges). The index is 3 longs/row — orders of magnitude
+    smaller than the text it came from — and shared with
+    ``minhash_dedup_pairs`` and the split consumers via
+    ``cached_filtered_index``.
 
     Pair-join floor (r14 probe): the exhaustive same-shingle self-join is
     this audit's cost by construction (sum(df^2) pair rows -> one hash
     aggregate). A size-compatibility pre-filter (J >= tau forces
     min(n_a,n_b) >= tau*max(n_a,n_b)) was probed and REJECTED: at sf0.1 it
-    prunes only 23.7% of pair rows while widening every surviving row by
-    the two attached sizes (net shuffle BYTES increase), and attaching
-    n_sh to the index rows needs a per-doc frame broadcast that does not
-    exist at 100 TB (the sort-merge fallback would add a full doc_id
-    shuffle of the index). The production path is minhash banding."""
+    pruned only 23.7% of pair rows, and then it had to attach both sizes
+    to every pair row through joins (net shuffle BYTES increase). The
+    sizes now ride on the index rows (``with_doc_size``, one doc_id
+    exchange per index build), so the pre-filter would be a predicate on
+    columns the join already carries; it has not been re-measured in that
+    form. The production path is minhash banding."""
     inv = cached_filtered_index(documents, n, max_df)
     return _pair_jaccard(inv, None, tau).orderBy("doc_a", "doc_b")
 
@@ -352,11 +328,12 @@ def minhash_dedup_pairs(
 ) -> DataFrame:
     """MinHash + LSH near-duplicate pairs, verified with exact Jaccard.
 
-    Pipeline: shingle fps (no shuffle) -> signatures (no shuffle) -> band
-    hashes (no shuffle) -> explode bands + hash-partition by (band,
-    band_hash) -> same-bucket pairs -> distinct candidates -> exact-Jaccard
-    verify -> filter tau. Output matches ``ngram_jaccard_pairs`` on recalled
-    pairs; LSH trades recall for never comparing all pairs.
+    Pipeline: cached shingle index -> signatures (one doc_id hash
+    aggregate) -> band hashes (a projection, no shuffle) -> explode bands +
+    hash-partition by (band, band_hash) -> same-bucket pairs -> distinct
+    candidates -> exact-Jaccard verify -> filter tau. Output matches
+    ``ngram_jaccard_pairs`` on recalled pairs; LSH trades recall for never
+    comparing all pairs.
     """
     def build():
         # persisted + cross-query shared for the same multi-consumer
@@ -531,25 +508,18 @@ def decontamination_check(
     per-shingle df (already capped at ``max_df``) times test-side size —
     at 100 TB the test side is tiny and the join is effectively an
     index probe of the training corpus."""
-    from xboard_spark.operators.sampling import with_split
-
-    split = with_split(documents, test_pct).select("doc_id", "split")
-    inv = cached_filtered_index(documents, n, max_df).join(split, "doc_id")
+    inv = _split_index(documents, test_pct, n, max_df)
     train = inv.filter(F.col("split") == "train").select(
         F.col("doc_id").alias("train_doc"), "shfp"
     )
     test = inv.filter(F.col("split") == "test").select(
-        F.col("doc_id").alias("test_doc"), "shfp"
-    )
-    n_test_sh = test.groupBy("test_doc").agg(F.count("*").alias("n_test_sh"))
-    shared = (
-        train.join(test, "shfp")
-        .groupBy("test_doc", "train_doc")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
+        F.col("doc_id").alias("test_doc"), "shfp", F.col("n_sh").alias("n_test_sh")
     )
     return (
-        shared.join(n_test_sh, "test_doc")
+        train.join(test, "shfp")
+        .groupBy("test_doc", "train_doc", "n_test_sh")
+        .agg(F.count("*").alias("shared"))
+        .filter(F.col("shared") >= min_shared)
         .select(
             "test_doc",
             "train_doc",
@@ -559,6 +529,19 @@ def decontamination_check(
         )
         .orderBy("test_doc", "train_doc")
     )
+
+
+def _split_index(
+    documents: DataFrame, test_pct: int, n: int, max_df: int
+) -> DataFrame:
+    """The cached filtered index with ``sampling.with_split``'s column. The
+    split is a pure function of doc_id, so it is computed on the index rows
+    themselves — no second scan of ``documents`` and no join. A NULL doc_id
+    has no split (it is not a document identity), as in a join on doc_id."""
+    from xboard_spark.operators.sampling import with_split
+
+    inv = cached_filtered_index(documents, n, max_df)
+    return with_split(inv.filter(F.col("doc_id").isNotNull()), test_pct)
 
 
 def dup_span_stats(documents: DataFrame, window: int = 10) -> DataFrame:
@@ -934,20 +917,18 @@ def ngram_novelty(
     64-bit fingerprints — no key skew by construction); a bloom filter on
     the train side turns the probe into a scan-local test if the join
     ever dominates."""
-    from xboard_spark.operators.sampling import with_split
-
-    split = with_split(documents, test_pct).select("doc_id", "split")
-    inv = cached_filtered_index(documents, n, max_df).join(split, "doc_id")
+    inv = _split_index(documents, test_pct, n, max_df)
     train_fps = (
         inv.filter(F.col("split") == "train").select("shfp").distinct()
         .withColumn("_hit", F.lit(1))
     )
-    test = inv.filter(F.col("split") == "test").select("doc_id", "shfp")
+    test = inv.filter(F.col("split") == "test").select(
+        "doc_id", "shfp", F.col("n_sh").cast("long").alias("n_shingles")
+    )
     probed = test.join(train_fps, "shfp", "left")
     return (
-        probed.groupBy("doc_id")
+        probed.groupBy("doc_id", "n_shingles")
         .agg(
-            F.count("*").cast("long").alias("n_shingles"),
             F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
             .cast("long")
             .alias("n_overlap"),
@@ -1120,20 +1101,14 @@ def similar_docs(
     interactive "find documents like this one" endpoint runs at 100 TB.
     Returns (doc_id, shared, n_sh, jaccard) ordered by similarity."""
     inv = cached_filtered_index(documents, n, max_df)
-    q = inv.filter(F.col("doc_id") == query_doc).select("shfp")
-    sizes = inv.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    q_size = sizes.filter(F.col("doc_id") == query_doc).select(
-        F.col("n_sh").alias("q_sh")
-    )
-    shared = (
-        inv.join(F.broadcast(q), "shfp")
-        .filter(F.col("doc_id") != query_doc)
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("shared"))
+    q = inv.filter(F.col("doc_id") == query_doc).select(
+        "shfp", F.col("n_sh").alias("q_sh")
     )
     return (
-        shared.join(sizes, "doc_id")
-        .crossJoin(F.broadcast(q_size))
+        inv.join(F.broadcast(q), "shfp")
+        .filter(F.col("doc_id") != query_doc)
+        .groupBy("doc_id", "n_sh", "q_sh")
+        .agg(F.count("*").alias("shared"))
         .select(
             "doc_id",
             F.col("shared").cast("long").alias("shared"),

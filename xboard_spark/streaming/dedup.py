@@ -5,10 +5,10 @@ emitted, and the index grows by the batch.
 
 State design (the part that matters at scale): the index is NOT the raw
 corpus — it is (a) the band-bucket table (doc_id, band, bh) and (b) the
-shingle index (doc_id, shfp), both compact integer tables partitioned by
-their hash keys. A new batch touches only the buckets its own band hashes
-land in; per-batch cost is proportional to batch size + collisions, never
-corpus size. The same foreachBatch runs unchanged under Structured
+shingle index (doc_id, shfp, n_sh) in the batch operators' row shape,
+both compact integer tables partitioned by their hash keys. A new batch
+touches only the buckets its own band hashes land in; per-batch cost is
+proportional to batch size + collisions, never corpus size. The same foreachBatch runs unchanged under Structured
 Streaming (file/Kafka source) — exercised here through its batch core so
 the semantics are testable deterministically.
 """
@@ -27,6 +27,7 @@ from xboard_spark.operators.dedup import (
     filtered_index,
     minhash_signatures,
     shingle_index,
+    with_doc_size,
 )
 from xboard_spark.streaming.conf import stream_shuffle_partitions
 
@@ -66,9 +67,10 @@ class IncrementalDedupIndex:
                 return self.spark.read.parquet(*files)
         return None
 
-    # target rows per written index file: 2-long rows ≈ 16 bytes raw, so
-    # ~4M rows lands near the 64-128 MB file-size sweet spot (guide §6);
-    # the count is rows-derived, never a constant tuned to local core count
+    # target rows per written index file: rows of 2-3 longs ≈ 16-24 bytes
+    # raw, so ~4M rows lands near the 64-128 MB file-size sweet spot
+    # (guide §6); the count is rows-derived, never a constant tuned to
+    # local core count
     ROWS_PER_FILE = 4_000_000
 
     def _append(self, df: DataFrame, name: str, n_rows: int | None = None) -> None:
@@ -134,27 +136,16 @@ class IncrementalDedupIndex:
         # sf0.1 — the largest single stage). Released via _live like the
         # other per-batch frames.
         raw_inv = shingle_index(documents).persist()
-        inv_new = filtered_index(raw_inv, self.max_df).persist()
+        # Doc sizes ride on the index rows as STATE: a doc's filtered
+        # shingle-set size is fixed the moment it is indexed (the df cap is
+        # batch-local, inv rows are written once), so the n_sh computed
+        # here over the batch is appended with the rows and the Jaccard
+        # verify reads it back instead of re-aggregating the WHOLE
+        # accumulated index every micro-batch — O(batch) work replacing an
+        # O(index) pass (guide §2.3/§2.4).
+        inv_new = with_doc_size(filtered_index(raw_inv, self.max_df)).persist()
         sigs_new = minhash_signatures(inv_new)
         bands_new = band_hashes(sigs_new).persist()
-        # Doc sizes as index STATE: a doc's filtered shingle-set size is
-        # fixed the moment it is indexed (the df cap is batch-local, inv
-        # rows are written once), so (doc_id, n_sh) is appended alongside
-        # the index and the Jaccard verify reads it back instead of
-        # re-aggregating the WHOLE accumulated index every micro-batch —
-        # O(batch) work replacing an O(index) pass (guide §2.3/§2.4).
-        # dropDuplicates on the union is the replay guard: a crash between
-        # the sizes and inv appends leaves orphan sizes rows whose docs
-        # re-enter on replay with IDENTICAL values, so dedup is exact.
-        sizes_new = (
-            inv_new.groupBy("doc_id").agg(F.count("*").alias("n_sh")).persist()
-        )
-        sizes_old = self._read("sizes")
-        all_sizes = (
-            sizes_new
-            if sizes_old is None
-            else sizes_old.unionByName(sizes_new).dropDuplicates(["doc_id"])
-        )
 
         bands_old = self._read("bands")
         all_bands = (
@@ -183,7 +174,7 @@ class IncrementalDedupIndex:
         # exact verify on the combined shingle index — the SHARED batch
         # definition, candidate-restricted
         pairs = (
-            _pair_jaccard(all_inv, candidates, self.tau, sizes=all_sizes)
+            _pair_jaccard(all_inv, candidates, self.tau)
             .select(
                 F.col("doc_a").cast("long").alias("doc_a"),
                 F.col("doc_b").cast("long").alias("doc_b"),
@@ -202,12 +193,11 @@ class IncrementalDedupIndex:
         # the counts are cached-frame reads (materialized by pairs.count()
         # above), spent to right-size the appended files — see _append
         self._append(bands_new, "bands", n_rows=bands_new.count())
-        self._append(sizes_new, "sizes", n_rows=sizes_new.count())
         # commit marker: the anti-join keys on inv, so it goes last (a
-        # crash before it leaves orphan band/sizes rows; the candidate
-        # distinct() and the sizes dedup absorb both on replay)
+        # crash before it leaves orphan band rows; the candidate
+        # distinct() absorbs them on replay)
         self._append(inv_new, "inv", n_rows=inv_new.count())
-        self._live = [raw_inv, bands_new, inv_new, sizes_new, pairs]
+        self._live = [raw_inv, bands_new, inv_new, pairs]
         return pairs
 
 
