@@ -113,327 +113,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return tpch.pricing_summary(_t(spark, sf, "lineitem"))
 
 
-# Rotation for the driver's 50-row correctness cap (the driver checks the
-# first 50 ``queries()`` entries each round). Round 4 ordering: the 23
-# queries whose last driver row is from ROUND 1 (the dedup/sampling/text
-# families and the relational extensions — rounds 2-3 spent the cap on the
-# similarity/temporal/window families) come first, then the 8 queries whose
-# behavior changed THIS round (the NTZ-fixed events/temporal family, the
-# oracle-aligned doc_stats/repetition_stats, the tightened pii_scan, the
-# max_iters=8 dedup_clusters), then the 9 queries NEW this round (need
-# first driver rows), then everything green-and-untouched in
-# CORRECTNESS_r03.json. After this round every registered query has a
-# driver row dated round 3 or 4.
-_ROUND4_FIRST = [
-    # -- last verified round 1 (23) --
-    "cohort_retention", "top_supplier_revenue", "approx_cardinality",
-    "quality_scores", "language_id", "doc_fingerprints", "tfidf_top_terms",
-    "doc_chunks", "doc_chunks_overlapping", "train_test_split",
-    "stratified_sample", "mixture_rebalance", "length_histogram",
-    "sequence_packing", "dedup_exact", "dedup_prefix", "ngram_jaccard",
-    "minhash_dedup", "decontamination", "simhash", "curation_stats",
-    "nation_customer_ranks", "segment_setops",
-    # -- behavior changed in round 4 (8) --
-    "events_dedup", "session_stats", "purchase_asof_view",
-    "views_before_purchase", "doc_stats", "repetition_stats", "pii_scan",
-    "dedup_clusters",
-    # -- new in round 4: need first driver rows --
-    "knn_label_vote", "boilerplate_ngrams", "dup_span_stats", "basket_pairs",
-    "value_outliers", "scd2_history", "table_profile", "decayed_engagement",
-    "salted_event_rollup", "fuzzy_customer_pairs", "value_drift_psi",
-    "incremental_daily_rollup", "orders_cdc_summary", "event_transitions",
-    "value_equidepth", "part_pagerank", "source_contamination",
-    "winsorized_stats",
-    # -- slot 50: landed after the round-4 window first filled --
-    "keyword_pagerank",
-]
-
-
-# Round-5 rotation (retired — kept for the round-5 correctness record).
-# Head: doc_stats + session_stats re-enter the
-# window so the round-5 oracle ::BIGINT cast fix (the 4-round-old driver
-# hash failure) gets a driver row THIS round, per VERDICT r4 #2. To make
-# room, two r3-driver-green similarity entries (knn_pq,
-# embedding_quantization) are displaced to _ROUND6_FIRST. The rest are the
-# first 48 of the 90 queries outside the round-4 driver window.
-_ROUND5_FIRST = [
-    "doc_stats", "session_stats",
-    "knn_bruteforce", "knn_lsh", "embedding_neardup", "knn_ivf",
-    "ivf_cell_sizes", "embedding_stats",
-    "pq_quantization", "label_centroids", "vocab_coverage",
-    "char_lm_fluency", "truncation_recall", "knn_rrf", "filter_funnel",
-    "dataset_card", "similar_docs", "sql_status_panel", "sql_orders_since",
-    "daily_type_unpivot", "text_embedding_alignment", "bootstrap_mean_ci",
-    "top_orders_per_segment", "ann_recall_audit", "prospect_customers",
-    "segment_priority_chi2", "quality_weighted_sample",
-    "first_purchase_latency", "bounce_rate_by_dow", "embedding_spectrum",
-    "ridge_probe", "logistic_probe", "kmeans_inertia", "canonical_docs",
-    "ngram_novelty", "semantic_decontam", "activity_heatmap",
-    "key_skew_profile", "traffic_anomalies", "temporal_split_audit",
-    "session_paths", "shipping_lag_stats", "lsh_candidate_profile",
-    "fk_integrity_audit", "volume_gaps", "user_erasure_audit",
-    "quantile_sketch_error", "ivf_delta_assign", "brand_supplier_diversity",
-    "revenue_change_forecast",
-]
-
-
-# Round-6 rotation (retired — kept for the round-6 correctness record).
-# Head: the 19 registered queries that had NEVER
-# had a driver row (round-4 additions outside every window so far), then the
-# relational basics last driver-checked r2/r3, then the two r3-green
-# similarity entries displaced from the round-5 window. Exactly 50; the
-# spill-over for round 7's head is: events_json, user_rollup,
-# hourly_windows (all r3-green, untouched).
-_ROUND6_FIRST = [
-    # -- never driver-checked (19) --
-    "customer_entity_clusters", "orders_mom_growth", "seasonal_naive_error",
-    "effective_tokens", "customer_spend_percentiles", "order_fanout_profile",
-    "watermark_delay_profile", "supplier_panel", "revenue_concentration",
-    "cluster_size_profile", "props_key_coverage", "reading_level",
-    "simhash_neardup", "part_degree_profile", "copurchase_triangles",
-    "chunk_dedup_stats", "conversion_attribution", "lsh_recall_audit",
-    "events_json_variant",
-    # -- relational basics, driver rows stale since r2/r3 (29) --
-    "status_distinct_aggs", "revenue_rollup", "value_percentiles",
-    "daily_type_pivot", "customers_without_orders", "rolling_revenue",
-    "customer_order_gaps", "orders_cube", "rfm_segments",
-    "funnel_conversion", "term_cooccurrence", "overview", "orders_by_date",
-    "orders_by_date_range", "top_customers", "recent_orders",
-    "customer_lookup", "upsert_merge", "pricing_summary",
-    "revenue_by_nation", "top_parts_by_revenue", "segment_top_orders",
-    "order_priority_counts", "nation_market_share", "orders_above_cust_avg",
-    "part_type_breakdown", "brand_promo_revenue", "tenant_orders_overview",
-    "events_daily",
-    # -- displaced from the round-5 window (r3 driver-green) (2) --
-    "knn_pq", "embedding_quantization",
-]
-
-
-# Round-7 rotation (retired — kept for the round-7 correctness record). Head:
-# the 3 round-6 additions + the 14 round-5 additions (never
-# driver-checked) + the 3 round-6 rewrites whose VALUES changed (the two
-# probes' micro-unit oracle twins; the bootstrap hash-once coin) + the 3
-# round-6 spill-overs; backfill: the oldest r4-green rows (the
-# _ROUND4_FIRST prefix outside the r5/r6 windows). The remaining
-# r4-greens (dup_span_stats..keyword_pagerank tail, plus the displaced
-# pii_scan) roll to round 8.
-_ROUND7_FIRST = [
-    # -- round-6 additions, never driver-checked (3) --
-    "pii_redact_stats", "quality_dup_correlation", "sole_late_suppliers",
-    # -- round-6 rewrites whose VALUES changed (3): the probes' micro-unit
-    # oracle twins shift last rounded digits; the bootstrap coin went
-    # hash-once+affine (same CI semantics, different replica draws) --
-    "ridge_probe", "logistic_probe", "bootstrap_mean_ci",
-    # -- round-5 additions, never driver-checked (14) --
-    "hard_negative_mining", "incremental_nation_rollup", "volume_shipping",
-    "returned_items_report", "customer_order_distribution",
-    "small_qty_part_revenue", "large_volume_orders", "temperature_mixture",
-    "training_order_audit", "delta_dedup_stats", "zipf_fit",
-    "bpe_merge_candidates", "bpe_learn", "epochs_plan",
-    # -- round-6 window spill (3) --
-    "events_json", "user_rollup", "hourly_windows",
-    # -- oldest r4-green rows (27; pii_scan displaced to round 8 by the
-    # bootstrap head entry) --
-    "cohort_retention", "top_supplier_revenue", "approx_cardinality",
-    "quality_scores", "language_id", "doc_fingerprints", "tfidf_top_terms",
-    "doc_chunks", "doc_chunks_overlapping", "train_test_split",
-    "stratified_sample", "mixture_rebalance", "length_histogram",
-    "sequence_packing", "dedup_exact", "dedup_prefix", "ngram_jaccard",
-    "minhash_dedup", "decontamination", "simhash", "curation_stats",
-    "nation_customer_ranks", "segment_setops", "events_dedup",
-    "purchase_asof_view", "views_before_purchase", "repetition_stats",
-]
-
-
-# Round-8 rotation (retired — kept for the round-8 correctness record).
-# Head: the single round-7
-# addition (never driver-checked), then the 22 queries whose last
-# driver row is r4-era (the entries the round-6 additions displaced
-# from the r7 window, the r4-window remainder, and
-# doc_stats/session_stats/dedup_clusters), then the oldest r5-window
-# entries. The 18-query spill (kmeans_inertia,
-# canonical_docs..revenue_change_forecast) rolls to round 9 (heads
-# _ROUND9_FIRST below); the entry the round-7 addition displaced
-# (embedding_spectrum) rolls to round 10.
-_ROUND8_FIRST = [
-    # -- round-7 addition, never driver-checked (1) --
-    "dedup_token_savings",
-    # -- r4-era driver rows by round 8 (22, incl. the r7 tail spill) --
-    "knn_label_vote", "boilerplate_ngrams", "dup_span_stats", "basket_pairs",
-    "value_outliers", "scd2_history", "table_profile", "decayed_engagement",
-    "salted_event_rollup", "fuzzy_customer_pairs", "value_drift_psi",
-    "incremental_daily_rollup", "orders_cdc_summary", "event_transitions",
-    "value_equidepth", "part_pagerank", "keyword_pagerank",
-    "source_contamination", "winsorized_stats", "doc_stats", "session_stats",
-    "dedup_clusters",
-    # -- oldest r5-window rows (28) --
-    "knn_bruteforce", "knn_lsh", "embedding_neardup", "knn_ivf",
-    "ivf_cell_sizes", "embedding_stats", "pq_quantization", "label_centroids",
-    "vocab_coverage", "char_lm_fluency", "truncation_recall", "knn_rrf",
-    "filter_funnel", "dataset_card", "similar_docs", "sql_status_panel",
-    "sql_orders_since", "daily_type_unpivot", "text_embedding_alignment",
-    "pii_scan", "top_orders_per_segment", "ann_recall_audit",
-    "prospect_customers", "segment_priority_chi2", "quality_weighted_sample",
-    "first_purchase_latency", "bounce_rate_by_dow",
-]
-
-
-# Round-9 rotation (retired — kept for the round-9 correctness record).
-# Head:
-# the 3 queries NEW this round (first driver rows) + the 2 sketch
-# queries REWRITTEN to invariant-oracle form this round (values
-# changed -> must re-hash now); then the 18 r5-era rows the staged list
-# carried (quantile_sketch_error moved into the head); then the oldest
-# r6-window rows. The 5 head insertions displace the 4 r6-window tail
-# entries (term_cooccurrence, overview, orders_by_date,
-# funnel_conversion -> head of _ROUND10_FIRST, aging one extra round).
-_ROUND9_FIRST = [
-    # -- new in round 9 (3) + rewritten to invariant-oracle form (2) --
-    "streaming_silver_merge", "top_customers_faithful",
-    "media_decode_audit",
-    "approx_cardinality", "quantile_sketch_error",
-    # -- r5-era driver rows (17; the r5-window tail that fit in neither
-    # the r7 nor the r8 window) --
-    "kmeans_inertia", "canonical_docs", "ngram_novelty", "semantic_decontam",
-    "activity_heatmap", "key_skew_profile", "traffic_anomalies",
-    "temporal_split_audit", "session_paths", "shipping_lag_stats",
-    "lsh_candidate_profile", "fk_integrity_audit", "volume_gaps",
-    "user_erasure_audit", "ivf_delta_assign",
-    "brand_supplier_diversity", "revenue_change_forecast",
-    # -- oldest r6-window rows (28) --
-    "customer_entity_clusters", "orders_mom_growth", "seasonal_naive_error",
-    "effective_tokens", "customer_spend_percentiles", "order_fanout_profile",
-    "watermark_delay_profile", "supplier_panel", "revenue_concentration",
-    "cluster_size_profile", "props_key_coverage", "reading_level",
-    "simhash_neardup", "part_degree_profile", "copurchase_triangles",
-    "chunk_dedup_stats", "conversion_attribution", "lsh_recall_audit",
-    "events_json_variant", "status_distinct_aggs", "revenue_rollup",
-    "value_percentiles", "daily_type_pivot", "customers_without_orders",
-    "rolling_revenue", "customer_order_gaps", "orders_cube", "rfm_segments",
-]
-
-
-# Round-10 rotation (retired — kept for the round-10 correctness
-# record). Head:
-# the 1 query NEW this round (streaming_dedup_pairs — first driver row)
-# + the 4 round-10 value/schema rewrites NOT already in the staged
-# window (traffic_anomalies, purchase_asof_view from round 11's staged
-# head, nation_customer_ranks likewise, volume_gaps — values changed
-# this round, so they must re-hash NOW); the other round-10 rewrites
-# (bpe_learn oracle conversion, user_rollup, hourly_windows,
-# cohort_retention doc-pin) were already inside this window. Then: the
-# 4 r6-window rows the round-9 head insertions displaced, the 19
-# queries in NONE of the r7/r8/r9 windows, and the oldest r7-window
-# rows. The 5 head insertions displace the 5 unchanged tail entries
-# (epochs_plan, events_json, top_supplier_revenue, quality_scores,
-# language_id) to the round-11 head.
-_ROUND10_FIRST = [
-    # -- new in round 10 (1) + value/schema-changed in round 10 (4) --
-    "streaming_dedup_pairs", "traffic_anomalies", "purchase_asof_view",
-    "nation_customer_ranks", "volume_gaps",
-    # -- displaced from the round-9 window by its head insertions (4) --
-    "term_cooccurrence", "overview", "orders_by_date", "funnel_conversion",
-    # -- in none of the r7/r8/r9 windows (19) --
-    "knn_pq", "embedding_quantization", "embedding_spectrum",
-    "orders_by_date_range", "top_customers", "recent_orders",
-    "customer_lookup", "upsert_merge", "pricing_summary",
-    "revenue_by_nation", "top_parts_by_revenue", "segment_top_orders",
-    "order_priority_counts", "nation_market_share", "orders_above_cust_avg",
-    "part_type_breakdown", "brand_promo_revenue", "tenant_orders_overview",
-    "events_daily",
-    # -- oldest r7-window rows (22; epochs_plan/events_json spilled to
-    # round 11 by the head insertions) --
-    "pii_redact_stats", "quality_dup_correlation", "sole_late_suppliers",
-    "ridge_probe", "logistic_probe", "bootstrap_mean_ci",
-    "hard_negative_mining", "incremental_nation_rollup", "volume_shipping",
-    "returned_items_report", "customer_order_distribution",
-    "small_qty_part_revenue", "large_volume_orders", "temperature_mixture",
-    "training_order_audit", "delta_dedup_stats", "zipf_fit",
-    "bpe_merge_candidates", "bpe_learn",
-    "user_rollup", "hourly_windows", "cohort_retention",
-]
-
-
-# Round-11 rotation (ACTIVE since round 11; re-validated against the
-# round-11 changes per its contract). Head: the 2 queries NEW this
-# round (input_bounds_audit — the corrupt-magnitude intake gate — and
-# capture_merge_audit — the S5 capture scan's driver-hashed face), then
-# the 5 unchanged entries the round-10 head insertions displaced
-# (epochs_plan, events_json, top_supplier_revenue, quality_scores —
-# whose round-10 post-seal mean_token_len schema change re-hashes here
-# per protocol — and language_id), then the r7-window rows in none of
-# the r8/r9/r10 windows (purchase_asof_view and nation_customer_ranks
-# left this list for the round-10 head when their rewrites landed),
-# plus the 3 r7-window rows the round-9 head insertions pushed out of
-# the round-10 backfill (tfidf_top_terms, doc_chunks, doc_fingerprints);
-# backfill: the oldest r8-window rows in their r8 order —
-# table_profile's round-11 DECIMAL-repr rewrite re-hashes inside this
-# window. The round-11 cent-sum rewrites (events_daily, hourly_windows,
-# user_rollup) and the chi2/effective_tokens null fixes are verified
-# value-preserving on the testdata, so they need no slot. The 2 head
-# insertions displace the 2 tail entries (knn_bruteforce, knn_lsh) to
-# round 12 (head of its r8-remainder section).
-_ROUND11_FIRST = [
-    # -- new in round 11 (2) --
-    "input_bounds_audit", "capture_merge_audit",
-    # -- displaced from the round-10 window by its head insertions (5) --
-    "epochs_plan", "events_json", "top_supplier_revenue", "quality_scores",
-    "language_id",
-    # -- r7-window rows in none of the r8/r9/r10 windows (17 + the 3
-    # round-10 spills) --
-    "doc_chunks_overlapping", "train_test_split", "stratified_sample",
-    "mixture_rebalance", "length_histogram", "sequence_packing",
-    "dedup_exact", "dedup_prefix", "ngram_jaccard", "minhash_dedup",
-    "decontamination", "simhash", "curation_stats",
-    "segment_setops", "events_dedup",
-    "views_before_purchase", "repetition_stats",
-    "tfidf_top_terms", "doc_chunks", "doc_fingerprints",
-    # -- oldest r8-window rows (25) --
-    "dedup_token_savings", "knn_label_vote", "boilerplate_ngrams",
-    "dup_span_stats", "basket_pairs", "value_outliers", "scd2_history",
-    "table_profile", "decayed_engagement", "salted_event_rollup",
-    "fuzzy_customer_pairs", "value_drift_psi", "incremental_daily_rollup",
-    "orders_cdc_summary", "event_transitions", "value_equidepth",
-    "part_pagerank", "keyword_pagerank", "source_contamination",
-    "winsorized_stats", "doc_stats", "session_stats", "dedup_clusters",
-]
-
-
-# Round-12 rotation, STAGED AHEAD (swap at the start of round 12;
-# re-validate against whatever round 12 adds). Head: the r8-window
-# remainder — the 3 entries the round-10 spills displaced from the
-# round-11 backfill (embedding_neardup, knn_ivf, ivf_cell_sizes), the
-# 22 r8-window rows in none of the r9/r10/r11 windows, plus the 2
-# entries the round-11 head insertions displaced (knn_bruteforce,
-# knn_lsh — also r8-window rows); backfill: the oldest r9-window rows
-# in their r9 order, skipping traffic_anomalies and volume_gaps
-# (refreshed by the round-10 head when their rewrites landed). The 2
-# round-11 insertions displace the 2 tail entries (effective_tokens,
-# customer_spend_percentiles) to the round-13 head.
-_ROUND12_FIRST = [
-    # -- r8-window remainder (3 + 22 + the 2 round-11 spills) --
-    "embedding_neardup", "knn_ivf", "ivf_cell_sizes",
-    "embedding_stats", "pq_quantization", "label_centroids",
-    "vocab_coverage", "char_lm_fluency", "truncation_recall", "knn_rrf",
-    "filter_funnel", "dataset_card", "similar_docs", "sql_status_panel",
-    "sql_orders_since", "daily_type_unpivot", "text_embedding_alignment",
-    "pii_scan", "top_orders_per_segment", "ann_recall_audit",
-    "prospect_customers", "segment_priority_chi2", "quality_weighted_sample",
-    "first_purchase_latency", "bounce_rate_by_dow",
-    "knn_bruteforce", "knn_lsh",
-    # -- oldest r9-window rows (23; traffic_anomalies/volume_gaps were
-    # refreshed in the round-10 window) --
-    "streaming_silver_merge", "top_customers_faithful", "media_decode_audit",
-    "approx_cardinality", "quantile_sketch_error", "kmeans_inertia",
-    "canonical_docs", "ngram_novelty", "semantic_decontam",
-    "activity_heatmap", "key_skew_profile", "temporal_split_audit",
-    "session_paths", "shipping_lag_stats", "lsh_candidate_profile",
-    "fk_integrity_audit", "user_erasure_audit", "ivf_delta_assign",
-    "brand_supplier_diversity", "revenue_change_forecast",
-    "customer_entity_clusters", "orders_mom_growth", "seasonal_naive_error",
-]
-
-
+# Rotation for the driver's 50-row correctness cap: the driver checks the
+# first 50 ``queries()`` entries each round.
+#
 # Round-13 rotation, STAGED AHEAD (swap at the start of round 13;
 # re-validate against whatever rounds 12-13 add). Head: the round-13
 # value-CHANGING rewrite (input_bounds_audit gained the n_offgrid
@@ -580,9 +262,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     round they land (head of the active window), and every other
     registered query re-enters a window on a ~3.5-round cycle (175
     queries / 50 slots). Spill-overs are documented on each staged list
-    (e.g. the round-11 head insertions displaced knn_bruteforce / knn_lsh
-    to round 12 and effective_tokens / customer_spend_percentiles to
-    round 13).
+    (e.g. the round-13 input_bounds_audit insertion displaced
+    part_type_breakdown into the round-14 list).
     """
     base = {
         # --- never driver-checked in r1: similarity search family ---

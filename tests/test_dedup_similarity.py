@@ -72,9 +72,9 @@ def test_minhash_subset_of_ngram(docs):
 
 
 def test_no_shingle_doc_excluded(docs):
-    sh = dedup.shingle_fps(docs).collect()
-    ids = {r.doc_id for r in sh}
-    assert 6 not in ids  # "tiny" has <3 tokens
+    ids = {r.doc_id for r in dedup.shingle_index(docs).collect()}
+    assert 6 not in ids  # "tiny" has <3 tokens: no index rows
+    assert ids == {1, 2, 3, 4, 5}
 
 
 def test_simhash_close_for_near_dups(docs):

@@ -200,6 +200,20 @@ def test_doc_chunks_excludes_null_doc_id(spark):
         assert {r.doc_id for r in out} == {1}
 
 
+def test_doc_chunks_overlapping_rejects_bad_stride(spark):
+    """stride 0 would divide by zero and stride > chunk_size makes Spark's
+    sequence() descend into wrong chunks: both fail with ValueError naming
+    the two values before any plan is built, also under ``python -O``."""
+    import pytest
+
+    from xboard_spark.operators.text import doc_chunks_overlapping
+
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    for stride in (0, 9):
+        with pytest.raises(ValueError, match=f"stride={stride}.*chunk_size=8"):
+            doc_chunks_overlapping(docs, chunk_size=8, stride=stride)
+
+
 def test_effective_tokens_population_is_identified_docs_only(spark):
     """All three aggregates of the effective-size panel cover the SAME
     corpus — identified documents (ADVICE r10): the chunk path

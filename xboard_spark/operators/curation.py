@@ -17,7 +17,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xboard_spark.operators.dedup import minhash_dedup_pairs
-from xboard_spark.operators.text import TOKEN_RE
+from xboard_spark.operators.text import (
+    LANG_STOPWORDS,
+    doc_chunks,
+    norm_text,
+    token_count_col,
+    tokens,
+)
 
 
 def curated_corpus_stats(
@@ -37,10 +43,7 @@ def curated_corpus_stats(
     null-key sweep).
     """
     documents = documents.filter(F.col("doc_id").isNotNull())
-    with_tokens = documents.withColumn(
-        "n_tokens",
-        F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)),
-    )
+    with_tokens = documents.withColumn("n_tokens", token_count_col(F.col("text")))
     quality_pass = with_tokens.filter(F.col("n_tokens") >= min_tokens)
     removed = (
         minhash_dedup_pairs(documents, tau=tau)
@@ -85,19 +88,15 @@ def filter_funnel(documents: DataFrame) -> DataFrame:
     over ONE scan; the funnel is one partial+final aggregate producing a
     single row, unpivoted driver-side-free via ``stack`` into 4 gate rows.
     No shuffle beyond the 1-row aggregate at any data size."""
-    from xboard_spark.operators.text import LANG_STOPWORDS, TOKEN_RE
-
     lo, hi = FUNNEL_TOKEN_LEN_RANGE
     text = F.col("text")
-    tokens = F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), 0)
-    n_tokens = F.size(tokens)
+    toks = tokens(text)
+    n_tokens = F.size(toks)
     n_chars = F.length(text)
     n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
     en_stop = LANG_STOPWORDS["en"]
-    n_stop = F.size(F.filter(tokens, lambda t: t.isin(en_stop)))
-    sum_tok_len = F.aggregate(
-        tokens, F.lit(0), lambda acc, t: acc + F.length(t)
-    )
+    n_stop = F.size(F.filter(toks, lambda t: t.isin(en_stop)))
+    sum_tok_len = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
     mean_tok_len = sum_tok_len / F.greatest(n_tokens, F.lit(1))
     g1 = n_tokens >= FUNNEL_MIN_TOKENS
     g2 = (n_alpha / F.greatest(n_chars, F.lit(1))) >= FUNNEL_MIN_ALPHA_RATIO
@@ -152,8 +151,6 @@ def dataset_card(documents: DataFrame) -> DataFrame:
     Scale shape: one scan computes the per-doc projections; the dup
     footprint is the exact-dedup hash aggregate folded to one row; the
     two 1-row frames cross-join."""
-    from xboard_spark.operators.dedup import _norm_text
-    from xboard_spark.operators.text import token_count_col
     from xboard_spark.functions.portable_hash import fingerprint64
 
     staged = documents.select(
@@ -161,7 +158,7 @@ def dataset_card(documents: DataFrame) -> DataFrame:
         "source",
         F.length("text").cast("long").alias("n_chars"),
         token_count_col(F.col("text")).cast("long").alias("n_tokens"),
-        fingerprint64(_norm_text(F.col("text"))).alias("fp"),
+        fingerprint64(norm_text(F.col("text"))).alias("fp"),
     )
     base = staged.agg(
         F.count("*").alias("n_docs"),
@@ -207,13 +204,11 @@ def effective_tokens(documents: DataFrame, chunk_size: int = 64) -> DataFrame:
     token count, so one member's count stands for its group (min for
     determinism)."""
     from xboard_spark.functions.portable_hash import fingerprint64
-    from xboard_spark.operators.dedup import _norm_text
-    from xboard_spark.operators.text import doc_chunks, token_count_col
 
     documents = documents.filter(F.col("doc_id").isNotNull())
     staged = documents.select(
         token_count_col(F.col("text")).cast("long").alias("n_tokens"),
-        fingerprint64(_norm_text(F.col("text"))).alias("fp"),
+        fingerprint64(norm_text(F.col("text"))).alias("fp"),
     )
     total = staged.agg(F.sum("n_tokens").cast("long").alias("total_tokens"))
     doc_u = (
@@ -265,7 +260,6 @@ def dedup_token_savings(documents: DataFrame, tau: float = 0.5) -> DataFrame:
     from pyspark.sql import Window
 
     from xboard_spark.operators.dedup import dedup_clusters
-    from xboard_spark.operators.text import token_count_col
 
     toks = documents.select(
         "doc_id",
@@ -341,7 +335,6 @@ def quality_dup_correlation(documents: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     from xboard_spark.functions.portable_hash import fingerprint64
-    from xboard_spark.operators.dedup import _norm_text
 
     text = F.col("text")
     n_chars = F.length(text)
@@ -351,7 +344,7 @@ def quality_dup_correlation(documents: DataFrame) -> DataFrame:
         F.least(
             F.floor(alpha_ratio * 10).cast("long"), F.lit(9)
         ).alias("alpha_band"),
-        fingerprint64(_norm_text(text)).alias("fingerprint"),
+        fingerprint64(norm_text(text)).alias("fingerprint"),
     )
     w = Window.partitionBy("fingerprint")
     return (

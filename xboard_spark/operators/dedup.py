@@ -37,20 +37,16 @@ from xboard_spark.functions.portable_hash import (
     fingerprint64_sql,
     minhash_params,
 )
-from xboard_spark.operators.text import TOKEN_RE
+from xboard_spark.operators.text import norm_text, token_stream, tokens
 
 N_PERMS = 32
 N_BANDS = 8  # 8 bands x 4 rows — s-curve threshold ~ (1/8)^(1/4) ≈ 0.59
 
 
-def _norm_text(text: Column) -> Column:
-    return F.regexp_replace(F.trim(F.lower(text)), "\\s+", " ")
-
-
 def exact_dedup_groups(documents: DataFrame, min_size: int = 2) -> DataFrame:
     """Exact duplicate groups by normalized-content fingerprint. Returns one
     row per duplicate group: fingerprint, group size, canonical (min) doc."""
-    fp = fingerprint64(_norm_text(F.col("text")))
+    fp = fingerprint64(norm_text(F.col("text")))
     return (
         documents.select(fp.alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
@@ -60,58 +56,22 @@ def exact_dedup_groups(documents: DataFrame, min_size: int = 2) -> DataFrame:
     )
 
 
-def shingle_fps(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, fps array<long>): distinct word-n-gram shingle fingerprints
-    per document. Pure array expressions — computed where the data lives,
-    nothing shuffles.
-
-    Each stage is a separate projection ON PURPOSE: higher-order-function
-    lambdas evaluate interpreted (outside whole-stage codegen), so an
-    unbound expression referenced inside a lambda is re-evaluated per array
-    element — inlining the tokenizer here cost ~6x wall clock before this
-    was staged. Bind each intermediate to a column and the lambda touches
-    only attributes."""
-    words = F.regexp_extract_all(_norm_text(F.col("text")), F.lit(TOKEN_RE), 0)
-    staged = documents.select("doc_id", words.alias("words")).filter(
-        F.size("words") >= n
-    )
-    shingle_at = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at("words", i + j) for j in range(n)]
-    )
-    shingled = staged.select(
-        "doc_id",
-        F.transform(
-            F.sequence(F.lit(1), F.size("words") - (n - 1)), shingle_at
-        ).alias("shingles"),
-    )
-    return shingled.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                "shingles",
-                lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
-            )
-        ).alias("fps"),
-    )
-
-
 def shingle_index(documents: DataFrame, n: int = 3) -> DataFrame:
     """Row-form inverted index (doc_id, shfp): distinct word-n-gram shingle
-    fingerprints, built explode-first — posexplode tokens, assemble each
-    shingle with lead() windows, fingerprint per ROW.
+    fingerprints, built explode-first — ``token_stream``, assemble each
+    shingle with lead() windows, fingerprint per ROW. A document with fewer
+    than ``n`` tokens has no shingle and no row.
 
-    Why not explode the ``shingle_fps`` arrays? The optimizer collapses the
-    interpreted higher-order-function chain into the Generate, re-evaluating
-    the tokenizer per emitted element (~10x wall clock, measured). Row-form
-    keeps every expression (regexp, md5, conv) inside whole-stage codegen.
-    The cost is one shuffle of the token stream for the per-doc window;
-    token rows are (long, int, short string) — compact — and the subsequent
-    df-filter/pair joins dwarf it at any scale."""
-
-    words = F.regexp_extract_all(_norm_text(F.col("text")), F.lit(TOKEN_RE), 0)
-    tok = documents.select(
-        "doc_id", F.posexplode(words).alias("pos", "word")
-    )
+    Why not build per-document shingle arrays with higher-order functions
+    and explode them? The lambdas run interpreted, and the optimizer
+    collapses the chain into the Generate, so an unbound expression inside
+    a lambda (the tokenizer) is re-evaluated per emitted element (about
+    6-10x wall clock, measured). Row-form keeps every expression (regexp,
+    md5, conv) inside whole-stage codegen. The cost is one shuffle of the
+    token stream for the per-doc window; token rows are (long, int, short
+    string) — compact — and the subsequent df-filter/pair joins dwarf it at
+    any scale."""
+    tok = token_stream(documents)
     win = Window.partitionBy("doc_id").orderBy("pos")
     parts = [F.col("word")] + [
         F.lead("word", j).over(win) for j in range(1, n)
@@ -121,10 +81,7 @@ def shingle_index(documents: DataFrame, n: int = 3) -> DataFrame:
         "doc_id", F.concat_ws(" ", *parts).alias("shingle"), last.alias("_last")
     ).filter(F.col("_last").isNotNull())
     return shingled.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("shfp"),
+        "doc_id", fingerprint64(F.col("shingle")).alias("shfp")
     ).dropDuplicates(["doc_id", "shfp"])
 
 
@@ -366,7 +323,8 @@ def simhash_col(fps_col: str, bits: int = 16) -> Column:
     sign of the sum of (+1/-1) votes across tokens. aggregate() runs
     per-row, JVM-side; ``fps_col`` must be a materialized column name (each
     of the ``bits`` aggregates re-reads it — an inline expression would be
-    recomputed ``bits`` times, see ``shingle_fps``)."""
+    recomputed ``bits`` times, as an unbound expression handed to an
+    interpreted higher-order function is re-evaluated on every use)."""
 
     def voter(bit_mask: int):
         return lambda acc, x: acc + F.when(
@@ -449,14 +407,9 @@ def simhash_fingerprints(
     paths; only the exact-integer vote counting crosses the Arrow boundary,
     and the frame is projected to (doc_id, fps) first (guide §4.1: opaque
     functions defeat column pruning, so pass only what the function needs)."""
-    tokens = F.regexp_extract_all(_norm_text(F.col("text")), F.lit(TOKEN_RE), 0)
-    staged = documents.select("doc_id", tokens.alias("tokens")).select(
-        "doc_id",
-        F.transform(
-            "tokens",
-            lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-        ).alias("fps"),
-    )
+    staged = documents.select(
+        "doc_id", tokens(F.col("text")).alias("tokens")
+    ).select("doc_id", F.transform("tokens", fingerprint64).alias("fps"))
     if arrow:
         out = staged.mapInArrow(
             _simhash_batch(bits), "doc_id long, simhash long"
@@ -478,7 +431,7 @@ def prefix_dedup_groups(
     ``exact_dedup_groups``, one shuffle of one row per fingerprint).
     Unlike full-content exact dedup this is non-empty on realistic corpora
     — shared openings are common even when full texts differ."""
-    fp = fingerprint64(F.substring(_norm_text(F.col("text")), 1, prefix_len))
+    fp = fingerprint64(F.substring(norm_text(F.col("text")), 1, prefix_len))
     return (
         documents.select(fp.alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
@@ -587,9 +540,7 @@ def dup_span_stats(documents: DataFrame, window: int = 10) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        F.regexp_extract_all(
-            _norm_text(F.col("text")), F.lit(TOKEN_RE), 0
-        ).alias("toks"),
+        tokens(F.col("text")).alias("toks"),
     )
     span_at = lambda i: F.concat_ws(  # noqa: E731
         " ", *[F.element_at("toks", i + j) for j in range(window)]
@@ -631,14 +582,7 @@ def dup_span_stats(documents: DataFrame, window: int = 10) -> DataFrame:
     # doc counts per slice: a second, CHEAP documents pass (token count
     # only — no span build, no fingerprints)
     n_docs = (
-        documents.filter(
-            F.size(
-                F.regexp_extract_all(
-                    _norm_text(F.col("text")), F.lit(TOKEN_RE), 0
-                )
-            )
-            >= window
-        )
+        documents.filter(F.size(tokens(F.col("text"))) >= window)
         .groupBy("lang", "source")
         .agg(F.count("*").alias("n_docs"))
     )
@@ -1176,7 +1120,7 @@ def delta_dedup_stats(documents: DataFrame, mod: int = 5) -> DataFrame:
     way ST5's backfill bookkeeping extends ingest — state from the last
     run bounds the work of this run."""
 
-    fp = fingerprint64(_norm_text(F.col("text")))
+    fp = fingerprint64(norm_text(F.col("text")))
     docs = documents.select("doc_id", "source", fp.alias("fp"))
     base = docs.filter(F.col("doc_id") % mod != 0)
     incoming = docs.filter(F.col("doc_id") % mod == 0)

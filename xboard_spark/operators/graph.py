@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xboard_spark.operators.text import TOKEN_RE
+from xboard_spark.operators.text import cooccurrence_pairs, token_stream
 from xboard_spark.cache import BoundedFrameCache
 
 DAMPING = 0.85
@@ -171,7 +171,7 @@ def keyword_pagerank(
     pair stream.
 
     Scale shape: pair generation reuses term_cooccurrence's bounded
-    fan-out (O(tokens * window), equi-joined on co-located keys — never
+    fan-out (``text.cooccurrence_pairs``, O(tokens * window) — never
     a within-document quadratic); ``min_count`` prunes the long tail of
     rare edges so the iterated graph is the frequent-term core. Edge
     weights are canonicalized least/greatest-first BEFORE symmetrizing
@@ -179,25 +179,9 @@ def keyword_pagerank(
     undirected weight. The PageRank core is shared with
     ``part_pagerank`` (identical arithmetic, same oracle discipline)."""
     def build():
-        tok = documents.select(
-            "doc_id",
-            F.posexplode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-            ).alias("pos", "word"),
+        pairs = cooccurrence_pairs(token_stream(documents), window).filter(
+            F.col("w_a") != F.col("w_b")
         )
-        left = tok.select(
-            "doc_id",
-            F.col("word").alias("w_a"),
-            F.explode(
-                F.sequence(F.col("pos") + 1, F.col("pos") + window)
-            ).alias("pos_b"),
-        )
-        pairs = left.join(
-            tok.select(
-                "doc_id", F.col("pos").alias("pos_b"), F.col("word").alias("w_b")
-            ),
-            ["doc_id", "pos_b"],
-        ).filter(F.col("w_a") != F.col("w_b"))
         und = (
             pairs.groupBy(
                 F.least("w_a", "w_b").alias("wa"),

@@ -26,10 +26,56 @@ LANG_STOPWORDS = {
 }
 
 
+def tokens(text: Column) -> Column:
+    """The engine's one tokenizer: every ``[a-z0-9]+`` run of the
+    lowercased text, in order (array<string>; NULL text gives NULL).
+    Whitespace never occurs inside a run, so collapsing or trimming it
+    first (``norm_text``) cannot change the result — it takes no
+    normalization option."""
+    return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), 0)
+
+
+def token_stream(documents: DataFrame) -> DataFrame:
+    """(doc_id, pos, word): one row per token occurrence, ``pos`` 0-based.
+    Row-form on purpose: what consumers compute per token stays inside
+    whole-stage codegen, where a token array fed to higher-order-function
+    lambdas is evaluated interpreted (see ``dedup.shingle_index``)."""
+    return documents.select(
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "word")
+    )
+
+
+def cooccurrence_pairs(tok: DataFrame, window: int) -> DataFrame:
+    """(doc_id, pos_b, w_a, w_b): ordered pairs of a ``token_stream`` frame
+    where w_b follows w_a within ``window`` tokens. A bounded fan-out —
+    each token emits its next ``window`` positions and equi-joins back on
+    (doc_id, pos) — so the stream is O(tokens * window) rows hash-joined
+    on co-located keys, never a quadratic-within-document self-join."""
+    left = tok.select(
+        "doc_id",
+        F.col("word").alias("w_a"),
+        F.explode(
+            F.sequence(F.col("pos") + 1, F.col("pos") + window)
+        ).alias("pos_b"),
+    )
+    return left.join(
+        tok.select(
+            "doc_id", F.col("pos").alias("pos_b"), F.col("word").alias("w_b")
+        ),
+        ["doc_id", "pos_b"],
+    )
+
+
+def norm_text(text: Column) -> Column:
+    """Whole-text normalization for content fingerprints: lowercase, trim,
+    collapse every whitespace run to one space."""
+    return F.regexp_replace(F.trim(F.lower(text)), "\\s+", " ")
+
+
 def token_count_col(text: Column) -> Column:
     """Whitespace/alnum token count: size of all alnum runs (BPE-ish regex
     tokenization is the same expression with a richer pattern)."""
-    return F.size(F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), 0))
+    return F.size(tokens(text))
 
 
 def doc_stats(documents: DataFrame) -> DataFrame:
@@ -71,14 +117,13 @@ def quality_scores(documents: DataFrame) -> DataFrame:
     integer division sum(token chars)/n_tokens, where the numerator is
     one ``array_join`` length (single pass, no per-element HOF)."""
     text = F.col("text")
-    lower = F.lower(text)
     n_chars = F.length(text)
-    tokens = F.regexp_extract_all(lower, F.lit(TOKEN_RE), 0)
-    n_tokens = F.size(tokens)
+    toks = tokens(text)
+    n_tokens = F.size(toks)
     n_alpha = F.length(F.regexp_replace(text, "[^A-Za-z]", ""))
     n_punct = F.length(F.regexp_replace(text, "[^.,;:!?]", ""))
     en_stop = LANG_STOPWORDS["en"]
-    n_stop = F.size(F.filter(tokens, lambda t: t.isin(en_stop)))
+    n_stop = F.size(F.filter(toks, lambda t: t.isin(en_stop)))
     return documents.select(
         "doc_id",
         "lang",
@@ -93,7 +138,7 @@ def quality_scores(documents: DataFrame) -> DataFrame:
             6,
         ).alias("spaces_per_token"),
         F.round(
-            F.length(F.array_join(tokens, ""))
+            F.length(F.array_join(toks, ""))
             / F.greatest(n_tokens, F.lit(1)),
             6,
         ).alias("mean_token_len"),
@@ -108,8 +153,7 @@ def language_id(documents: DataFrame) -> DataFrame:
     code: a de/en tie predicts en). Returns predicted language +
     agreement with the labeled ``lang`` column aggregated per true lang.
     """
-    lower = F.lower(F.col("text"))
-    tokens = F.regexp_extract_all(lower, F.lit(TOKEN_RE), 0)
+    toks = tokens(F.col("text"))
 
     def stop_filter(words: list[str]):
         return lambda t: t.isin(words)
@@ -118,7 +162,7 @@ def language_id(documents: DataFrame) -> DataFrame:
         "doc_id",
         "lang",
         *[
-            F.size(F.filter(tokens, stop_filter(words))).alias(f"hits_{lg}")
+            F.size(F.filter(toks, stop_filter(words))).alias(f"hits_{lg}")
             for lg, words in LANG_STOPWORDS.items()
         ],
     )
@@ -139,12 +183,14 @@ def language_id(documents: DataFrame) -> DataFrame:
 
 
 def doc_fingerprints(documents: DataFrame) -> DataFrame:
-    """Document fingerprinting: portable 60-bit content hash over normalized
-    text (collapse whitespace, lowercase). The exact-dedup key; also the
-    rolling-hash seed for shingles in ``dedup.py``."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), "\\s+", " ")
+    """Document fingerprinting: portable 60-bit content hash over
+    ``norm_text`` (collapse whitespace, lowercase) — the exact-dedup key
+    ``dedup.exact_dedup_groups`` groups by."""
     return documents.select(
-        "doc_id", fingerprint64(norm).alias("fingerprint"), "lang", "source"
+        "doc_id",
+        fingerprint64(norm_text(F.col("text"))).alias("fingerprint"),
+        "lang",
+        "source",
     )
 
 
@@ -157,10 +203,7 @@ def tfidf_top_terms(documents: DataFrame, k: int = 3, max_doc_id: int = 50) -> D
     from pyspark.sql import Window
 
     toks = documents.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-        ).alias("term"),
+        "doc_id", F.explode(tokens(F.col("text"))).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
@@ -207,7 +250,7 @@ def doc_chunks(documents: DataFrame, chunk_size: int = 64) -> DataFrame:
     reassembled chunk text (compact, joinable downstream key; the text
     itself is reproducible from the tokens).
 
-    Shape: posexplode tokens (row-form — regexp + codegen, see
+    Shape: ``token_stream`` (row-form — regexp + codegen, see
     dedup.shingle_index for why not array HOFs), chunk_id = pos div size
     (pure projection), then ONE hash aggregate on (doc_id, chunk_id) whose
     sort_array(collect_list(struct(pos, word))) re-assembles token order
@@ -220,13 +263,7 @@ def doc_chunks(documents: DataFrame, chunk_size: int = 64) -> DataFrame:
     identity-less document into one garbage pseudo-doc whose token
     tie-order is engine-dependent (found by the round-10 null-key
     sweep)."""
-    documents = documents.filter(F.col("doc_id").isNotNull())
-    tok = documents.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-        ).alias("pos", "word"),
-    )
+    tok = token_stream(documents.filter(F.col("doc_id").isNotNull()))
     grouped = (
         tok.withColumn("chunk_id", F.floor(F.col("pos") / chunk_size))
         .groupBy("doc_id", "chunk_id")
@@ -265,17 +302,16 @@ def doc_chunks_overlapping(
     ``doc_chunks``. Fan-out is a constant factor (the overlap ratio), so
     the 100 TB cost model is identical to doc_chunks times that constant.
 
-    Requires stride <= chunk_size (Spark's sequence() DESCENDS when
-    start > stop — a stride gap would silently emit wrong chunks rather
-    than none). NULL doc_id rows are excluded, as in ``doc_chunks``."""
-    assert 1 <= stride <= chunk_size, "stride must be in [1, chunk_size]"
-    documents = documents.filter(F.col("doc_id").isNotNull())
-    tok = documents.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-        ).alias("pos", "word"),
-    )
+    Requires 1 <= stride <= chunk_size, checked before any plan is built
+    (Spark's sequence() DESCENDS when start > stop — a stride gap would
+    silently emit wrong chunks rather than none — and stride 0 divides by
+    zero). NULL doc_id rows are excluded, as in ``doc_chunks``."""
+    if not 1 <= stride <= chunk_size:
+        raise ValueError(
+            f"doc_chunks_overlapping: stride={stride} must be in "
+            f"[1, chunk_size={chunk_size}]"
+        )
+    tok = token_stream(documents.filter(F.col("doc_id").isNotNull()))
     lo = F.greatest(
         F.lit(0), F.floor((F.col("pos") - chunk_size + stride) / stride)
     )
@@ -316,36 +352,16 @@ def term_cooccurrence(
     pair frequency, scored with pointwise mutual information
     ln(p(a,b) / (p(a) p(b))) (Church & Hanks 1990).
 
-    Scale shape: the pair stream is built by a bounded fan-out — each token
-    emits its next ``window`` positions (explode of a constant-length
-    sequence) and equi-joins back on (doc_id, pos) — so pair generation is
-    O(tokens * window) rows hash-joined on co-located keys, never a
-    quadratic-within-document self-join. Counts are partial+final hash
+    Scale shape: the pair stream is ``cooccurrence_pairs``' bounded
+    fan-out, O(tokens * window) rows. Counts are partial+final hash
     aggregates; the PMI arithmetic divides BEFORE multiplying so both
     engines evaluate the identical IEEE expression tree. The corpus totals
     (token count, pair count) stay IN the plan as one-row aggregates joined
     back via broadcast crossJoin — no driver-side collect/count actions, so
     the whole query is a single action."""
-    tok = documents.select(
-        "doc_id",
-        F.posexplode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-        ).alias("pos", "word"),
-    ).persist()
+    tok = token_stream(documents).persist()
     token_total = tok.agg(F.count("*").cast("double").alias("__n_tokens"))
-    left = tok.select(
-        "doc_id",
-        F.col("word").alias("w_a"),
-        F.explode(
-            F.sequence(F.col("pos") + 1, F.col("pos") + window)
-        ).alias("pos_b"),
-    )
-    pairs = left.join(
-        tok.select(
-            "doc_id", F.col("pos").alias("pos_b"), F.col("word").alias("w_b")
-        ),
-        ["doc_id", "pos_b"],
-    )
+    pairs = cooccurrence_pairs(tok, window)
     pair_counts = pairs.groupBy("w_a", "w_b").agg(F.count("*").alias("pair_n"))
     pair_total = pair_counts.agg(
         F.sum("pair_n").cast("double").alias("__n_pairs")
@@ -401,12 +417,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     partial aggregation absorbs the fan-out map-side; nothing is ever
     per-corpus global, so the plan is one scan + bounded shuffles at any
     corpus size."""
-    toks = documents.select(
-        "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0).alias(
-            "toks"
-        ),
-    )
+    toks = documents.select("doc_id", tokens(F.col("text")).alias("toks"))
     tc = (
         toks.select("doc_id", F.explode("toks").alias("tok"))
         .groupBy("doc_id", "tok")
@@ -477,12 +488,7 @@ def boilerplate_ngrams(
     aggregates -> global top-N via TakeOrderedAndProject. Partial
     aggregation absorbs the explode fan-out map-side; nothing is
     per-corpus except the final top-N, which is bounded by ``top``."""
-    toks = documents.select(
-        "doc_id",
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0).alias(
-            "toks"
-        ),
-    )
+    toks = documents.select("doc_id", tokens(F.col("text")).alias("toks"))
     gram_expr = "concat_ws(' ', {})".format(
         ", ".join(f"toks[i+{j}]" for j in range(n))
     )
@@ -610,11 +616,7 @@ def vocab_coverage(documents: DataFrame, vocab_size: int = 1000) -> DataFrame:
     a tiny per-slice aggregate. The coverage ratio is one exact-int
     division."""
     toks = documents.select(
-        "lang",
-        "source",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-        ).alias("word"),
+        "lang", "source", F.explode(tokens(F.col("text"))).alias("word")
     )
     vocab = (
         toks.groupBy("word")
@@ -732,16 +734,18 @@ def char_lm_fluency(documents: DataFrame) -> DataFrame:
     mojibake, or shuffled text score far below natural language under
     their own corpus statistics.
 
-    Scale shape: bigrams are built INSIDE a per-row array transform and
-    exploded as 2-char strings (exploding (position, full-text) pairs
-    would duplicate the document per character — measured-width
-    discipline, see shingle_fps); the model is two hash aggregates
+    Scale shape: bigrams are built per row from the normalized text bound
+    as its own column ``norm`` and emitted as 2-char strings (exploding
+    (position, full-text) pairs would duplicate the document per
+    character, and an expression left unbound inside a higher-order-
+    function lambda is re-evaluated per element, measured at about
+    6-10x); the model is two hash aggregates
     (bigram counts, first-char context totals) whose join keys are the
     ≤ |alphabet|² bigram space — broadcast-sized forever, however big the
     corpus. p(b|a) = c(ab)/c(a·) is an exact-int division; the per-slice
     mean of ln p is 6dp-rounded (summation-order tolerance, as
     everywhere)."""
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), "\\s+", " ")
+    norm = norm_text(F.col("text"))
     staged = documents.select("lang", "source", norm.alias("norm")).filter(
         F.length("norm") >= 2
     )
@@ -810,16 +814,13 @@ def reading_level(documents: DataFrame) -> DataFrame:
 
     Scale shape: per-row regexp expressions in one scan, no shuffle, no
     UDF."""
-    lower = F.lower(F.col("text"))
     n_sent = F.greatest(
         F.size(F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), 0)),
         F.lit(1),
     ).cast("long")
-    n_tok = F.greatest(
-        F.size(F.regexp_extract_all(lower, F.lit(TOKEN_RE), 0)), F.lit(1)
-    ).cast("long")
+    n_tok = F.greatest(token_count_col(F.col("text")), F.lit(1)).cast("long")
     n_syl = F.size(
-        F.regexp_extract_all(lower, F.lit("[aeiouy]+"), 0)
+        F.regexp_extract_all(F.lower(F.col("text")), F.lit("[aeiouy]+"), 0)
     ).cast("long")
     return (
         documents.select(
@@ -896,11 +897,7 @@ def zipf_fit(documents: DataFrame, top_n: int = 1000) -> DataFrame:
     behavior (Spark NaN vs DuckDB setting-dependent)."""
     from pyspark.sql import Window
 
-    toks = documents.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0)
-        ).alias("word")
-    )
+    toks = documents.select(F.explode(tokens(F.col("text"))).alias("word"))
     top = (
         toks.groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -952,10 +949,7 @@ def bpe_merge_candidates(documents: DataFrame, top_k: int = 20) -> DataFrame:
     shuffle), then ONE partial/final count keyed on the pair and a
     TakeOrderedAndProject top-k. Deterministic total order: count desc,
     pair asc. Counts are exact int64."""
-    words = F.filter(
-        F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0),
-        lambda w: F.length(w) >= 2,
-    )
+    words = F.filter(tokens(F.col("text")), lambda w: F.length(w) >= 2)
     pairs = F.flatten(
         F.transform(
             words,
@@ -1024,13 +1018,7 @@ def bpe_learn(documents: DataFrame, n_merges: int = 5) -> DataFrame:
             f"scheduling {n_merges} sequential job barriers."
         )
     word_freq = (
-        documents.select(
-            F.explode(
-                F.regexp_extract_all(
-                    F.lower(F.col("text")), F.lit(TOKEN_RE), 0
-                )
-            ).alias("word")
-        )
+        documents.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .select(F.split("word", "").alias("sym"), "freq")
